@@ -109,6 +109,24 @@ def _hygiene(spark) -> None:
         print(f"# cleanup warning: {e}", file=sys.stderr)
 
 
+def _emit(payload: dict) -> None:
+    """Print the driver lines. A ~60-byte compact line with the
+    headline totals comes first; it has no "metric" key, so a parser
+    scanning for the corpus_wall line cannot pick it up. The full
+    payload (~6 KB at 177 entries) is printed LAST, because the driver
+    parses the last JSON line of stdout."""
+    print(
+        json.dumps(
+            {
+                "value": payload["value"],
+                "n": len(payload["queries"]),
+                "failed": payload["failed"],
+            }
+        )
+    )
+    print(json.dumps(payload))
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
@@ -618,24 +636,7 @@ def main() -> int:
         print(f"# full timings -> {local}", file=sys.stderr)
     except Exception as e:  # the artifact must never fail the bench
         print(f"# local artifact warning: {e}", file=sys.stderr)
-    print(json.dumps(payload))
-    # Truncation-proof totals (VERDICT r13 item 2): the full one-line
-    # payload above is ~6 KB at 177 entries and the driver's stdout
-    # tail capture front-truncated it in r12 (PERF_r13 lost the whole
-    # round-over-round comparison). A second, ~60-byte compact line —
-    # printed LAST, so a bounded tail always holds it intact — carries
-    # the headline totals. It deliberately has no "metric" key, so a
-    # parser scanning for the corpus_wall line can never pick it up by
-    # mistake; the full line stays the driver contract.
-    print(
-        json.dumps(
-            {
-                "value": payload["value"],
-                "n": len(timings),
-                "failed": failed,
-            }
-        )
-    )
+    _emit(payload)
     spark.stop()
     return 0
 

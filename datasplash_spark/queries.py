@@ -8559,335 +8559,35 @@ _ALL: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
 
 
 # ---------------------------------------------------------------------
-# Driver gate order (round 13).  The external driver gates exactly the
-# FIRST 50 entries of REGISTRY each round; list order below IS the
-# round-13 gate contract.
-#
-# Window composition (greedy-by-staleness rotation, VERDICT r7 item
-# 1): the window always holds the stalest 50 queries (never-gated
-# counts as infinitely stale), so no query outside the window can
-# ever be staler than one inside it, and with 161 gated queries at
-# 50/round nothing ages past the 8-round alternating-windows
-# backstop. The import-time invariant below derives each query's
-# newest driver row from the CORRECTNESS_r*.json artifacts
-# themselves (not a hand-kept table) and fails the registry — and
-# therefore every test — if the order violates greedy fill or the
-# staleness cap.
-#
-# Round-13 window = _NEW_R13 (round-13 promotions — never
-# driver-gated, so infinitely stale, leading by greedy fill) +
-# _R9_OVERFLOW (newest driver row CORRECTNESS_r09 — the 12-query
-# equal-staleness overflow the round-12 window could not hold;
-# stalest remaining class, so it MUST lead this round) + the
-# stalest prefix of the r10-green block. The r10 queries left
-# outside share the inside minimum staleness (equal-staleness
-# overflow, permitted by the invariant) and lead the round-14
-# window.
-#
-# PROMOTION CHECKLIST (append-only; VERDICT r11 item 5): when a
-# staged query is promoted into this registry you must (1) add its
-# _ALL entry, (2) place it in _NEW_R{round} at the window head,
-# (3) retire/merge a gated row if the registry is at the cap,
-# (4) move it out of tests/test_extensions.py::
-# test_staged_queries_match_oracle's staged dict (test_gate_all
-# covers it now), and (5) UPDATE ITS DOCSTRING — "STAGED" must only
-# ever describe genuinely staged queries (grep STAGED to audit).
-#
-# Headroom policy (round 12, superseding the round-10 zero-sum
-# rule): the driver declined to grow the 50-row gate window, so the
-# registry adopts the ALTERNATING-WINDOWS design the round-11
-# ROUNDLOG sketched — the backstop rises to 8 rounds, raising the
-# derived cap in test_registry_headroom from 156 to 356. The
-# greedy-by-staleness fill is unchanged: with N gated queries each
-# query still gates every ceil(N/50) rounds (at 156 that is every
-# ~3-4 rounds, exactly as before; the registry can now grow to ~2
-# full windows, i.e. two 50-row cohorts alternating through the
-# gate, before freshness degrades toward the backstop). Promotions
-# no longer require a one-for-one retirement below the cap, but
-# strict-subset queries are still retired on promotion as corpus
-# hygiene (this round: office_extract ⊂ doctext_sweep).
-
-#: Queries PROMOTED in round 13 (never driver-gated => infinitely
-#: stale => window head; every entry followed the promotion
-#: checklist above). code_extract gates the source-code family
-#: (functions/code.py: conservative shebang/declaration detection,
-#: LOSSLESS text, comment/string-aware line stats); tabular_extract
-#: gates the CSV/TSV + JSONL family (functions/tabular.py:
-#: quote-aware flattening under the shared paragraph contract, with
-#: every 23rd document rendered ragged/malformed so the typed
-#: quarantine is driver-gated).
-_NEW_R13: list[str] = [
-    "code_extract",
-    "tabular_extract",
-    "av_transcript_pairs",
-    "parquet_extract",
-    "compressed_extract",
-    "notebook_extract",
-    "email_extract",
-    "log_extract",
-    "feed_extract",
-    "ics_extract",
-    "router_report",
-    "charset_extract",
-]
-
-#: the r9-green overflow (newest driver row CORRECTNESS_r09; the 12
-#: equal-staleness queries the round-12 window could not hold —
-#: staleness 5 at the r13 run, stalest gated class, so they MUST
-#: lead this round's window).
-_R9_OVERFLOW: list[str] = [
-    "global_shuffle",
-    "temperature_mix",
-    "dsir_scores",
-    "dedup_cluster_report",
-    "embedding_clusters",
-    "dedup_clusters",
-    "dedup_keep_best",
-    "objectmode_wordcount",
-    "objectmode_join",
-    "objectmode_side_outputs",
-    "pricing_summary",
-    "html_extract",
-]
-
-#: the r10-green block (newest driver row CORRECTNESS_r10,
-#: staleness 4 at the r13 run): the full round-10 window (6 + 5
-#: promotions + 39 then-stalest r7). The stalest-first prefix fills
-#: the round-13 window behind _NEW_R13 + _R9_OVERFLOW; the overflow
-#: shares the inside minimum staleness and leads round 14.
-_GREEN_R10: list[str] = [
-    "pdf_extract",
-    "image_neardup_clusters",
-    "image_formats_all",
-    "video_frames",
-    "rebuild_paragraphs",
-    "mp4_metadata",
-    "audio_metadata",
-    "remove_spans_keep_first",
-    "robots_filter",
-    "winnow_fingerprints",
-    "bpe_pairs",
-    "source_drift",
-    "bpe_tokenize",
-    "textrank",
-    "event_paths",
-    "bigram_lm",
-    "content_manifest",
-    "domain_reweight",
-    "quantized_search",
-    "edit_verify",
-    "mad_outliers",
-    "boilerplate_removal",
-    "subword_fertility",
-    "chat_validate",
-    "chat_turns",
-    "url_normalize",
-    "host_stats",
-    "topic_tags",
-    "embedding_audit",
-    "sentence_chunks",
-    "fk_audit",
-    "bm25_negatives",
-    "length_batches",
-    "budget_batches",
-    "neighbor_report",
-    "sft_tokens",
-    "canary_report",
-    "mapcat_tokens",
-    "distinct",
-    "distinct_by",
-    "partition_by",
-    "concat_count",
-    "setops_intersect",
-    "setops_except",
-    "setops_union",
-    "semantic_dedup",
-    "contrastive_pairs",
-    "hybrid_search",
-    # restored round 12 (retired-by-absorption in round 11 under the
-    # zero-sum cap; both r10-green, so they rejoin their staleness
-    # class and rotate normally)
-    "gif_frames",
-    "image_progressive",
-]
-
-#: the r11-green block (newest driver row CORRECTNESS_r11,
-#: staleness 3 at the r13 run): the full round-11 window (4
-#: promotions + the 9-query r7 tail + 37 then-stalest r8), MINUS
-#: office_extract (retired round 12, absorbed by doctext_sweep —
-#: see the _ALL comment).
-_GREEN_R11: list[str] = [
-    "warc_roundtrip",
-    "image_exif",
-    "latex_extract",
-    "script_mix",
-    "ngram_novelty",
-    "cdc_chunks",
-    "zipf_fit",
-    "audio_features",
-    "curriculum",
-    "filter_project",
-    "group_by_key",
-    "frequencies",
-    "keep",
-    "frequencies_by",
-    "combine_global",
-    "flatten",
-    "top_customers",
-    "top_per_nation",
-    "price_percentiles",
-    "combiner_mapper_predicate",
-    "quality_above_median",
-    "length_quartiles",
-    "salted_agg",
-    "text_stats",
-    "lang_id",
-    "fingerprint",
-    "char_entropy",
-    "pack_sequences",
-    "token_budget_mix",
-    "pii_redact",
-    "dedup_lines",
-    "doc_quality",
-    "quota_sample",
-    "quality_classifier",
-    "tfidf_top_terms",
-    "stateful_running_sum",
-    "stateful_distinct_types",
-    "corpus_prep_pipeline",
-    "repeated_ngrams",
-    "fingerprint_rolling",
-    "similarity_topk",
-    "similarity_ann",
-    "similarity_ivf",
-    "knn_search",
-    "dedup_simhash",
-    "dedup_embedding_pairs",
-    "dedup_cross_corpus",
-    "ngram_jaccard_verify",
-    "dedup_minhash_pairs",
-]
-
-#: the r12-green block (newest driver row CORRECTNESS_r12,
-#: staleness 2 — freshest class, back of the registry): the full
-#: round-12 window (the 4 round-12 promotions + the 11-query
-#: r8-green tail + the 35 then-stalest r9).
-_GREEN_R12: list[str] = [
-    "doctext_sweep",
-    "markdown_extract",
-    "wikitext_extract",
-    "subtitles_extract",
-    "source_overlap",
-    "bm25_search",
-    "ngram_containment",
-    "corpus_diff",
-    "filter_report",
-    "filter_funnel",
-    "semantic_pack",
-    "zorder_key",
-    "ann_recall",
-    "paragraph_dedup",
-    "readability",
-    "importance_resample",
-    "ccnet_buckets",
-    "collocations",
-    "skew_report",
-    "cohort_retention",
-    "bm25_multi",
-    "weighted_sample_det",
-    "join_required",
-    "join_optional",
-    "join_multiway",
-    "cogroup_counts",
-    "sample_global_det",
-    "sample_per_key_det",
-    "window_fixed",
-    "window_sliding",
-    "window_session",
-    "dedup_exact",
-    "chunk_documents",
-    "unigram_quality",
-    "funnel",
-    "sessionize",
-    "rolling_window",
-    "stratified_sample",
-    "ngram_counts",
-    "pivot",
-    "profile",
-    "hash_split",
-    "rollup",
-    "asof_last_view",
-    "range_join_error_window",
-    "gopher_quality",
-    "side_input_filter",
-    "dedup_incremental",
-    "decontaminate",
-    "remove_repeated_spans",
-]
-
-_WINDOW_HEAD_R13: list[str] = (
-    _NEW_R13
-    + _R9_OVERFLOW
-    + _GREEN_R10[: 50 - len(_NEW_R13) - len(_R9_OVERFLOW)]
-)
-
-#: equal-staleness overflow: the r10-green queries the 50-row window
-#: cannot hold this round; they lead the round-14 window.
-_R10_OVERFLOW: list[str] = _GREEN_R10[
-    50 - len(_NEW_R13) - len(_R9_OVERFLOW):
-]
-
-#: round-14 rotation (the r13 artifact landed, so the r13 head is the
-#: freshest class and rotates to the back): greedy-by-staleness head =
-#: the 24 r10-green overflow queries (staleness 4) + the first 26
-#: r11-greens (staleness 3 — equal-staleness split, the rest follow
-#: immediately after the window).
-_WINDOW_HEAD_R14: list[str] = _R10_OVERFLOW + _GREEN_R11[:26]
-_R11_OVERFLOW: list[str] = _GREEN_R11[26:]
-
-_ORDER: list[str] = (
-    _WINDOW_HEAD_R14 + _R11_OVERFLOW + _GREEN_R12 + _WINDOW_HEAD_R13
-)
-if len(_ORDER) != len(set(_ORDER)):
-    raise RuntimeError("registry _ORDER contains duplicates")
-if set(_ORDER) != set(_ALL):
-    raise RuntimeError(
-        "registry _ORDER out of sync with _ALL: "
-        f"missing={sorted(set(_ALL) - set(_ORDER))} "
-        f"extra={sorted(set(_ORDER) - set(_ALL))}"
-    )
+# Driver gate order. The external driver hash-checks the first
+# _DRIVER_WINDOW entries of REGISTRY against DuckDB each round.
 
 _DRIVER_WINDOW = 50
-#: hard staleness backstop: any query whose driver row would be this
-#: many rounds old at the NEXT driver run MUST sit inside the window
-#: (so nothing can ever age past it). Greedy fill keeps the CURRENT
-#: 156-query registry at staleness ≤ 4 on its own (each query gates
-#: every ceil(156/50) ≈ 3-4 rounds regardless of the backstop); the
-#: backstop at 8 — the round-12 ALTERNATING-WINDOWS design (VERDICT
-#: r11 item 4: the driver declined to grow the 50-row window, so two
-#: 50-row cohorts may alternate through the gate) — is what fails
-#: the build if the registry grows past ~400 gated queries (8 ×
-#: 50-row windows) without splitting the rotation: the "stop
-#: over-adding" forcing function, same role the round-6 debt
-#: invariant played for never-gated queries.
+#: staleness backstop in rounds: with _DRIVER_WINDOW queries gated per
+#: round, a registry of about _DRIVER_WINDOW * (_MAX_STALENESS - 1)
+#: queries is the most the rotation can keep inside it
+#: (tests/test_plans.py::test_registry_headroom derives its cap here).
 _MAX_STALENESS = 8
 
+_ARTIFACT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-def _latest_driver_rows() -> tuple[int, dict[str, int]]:
-    """Newest driver CORRECTNESS row per query, derived from the
-    repo-root ``CORRECTNESS_r*.json`` artifacts (same green criterion
-    as ``scripts/rotation_status.py``: full hash match, or a
-    ``no_oracle`` row with a successful Spark run for the by-design
-    rows-only queries). Returns ``(latest_round, {name: round})``;
-    ``(0, {})`` when no artifacts exist (installed-package case — the
-    staleness invariant then has nothing to check)."""
+
+def _latest_driver_rows(
+    root: str = _ARTIFACT_ROOT,
+) -> tuple[list[int], dict[str, int]]:
+    """Newest driver-green round per query, read from the
+    ``CORRECTNESS_rNN.json`` artifacts in ``root``. A row is green on
+    a full hash match, or when it is a ``no_oracle`` row whose Spark
+    run succeeded (the by-design rows-only queries). Returns
+    ``(rounds, {name: newest green round})`` with ``rounds`` the
+    sorted rounds whose artifact parsed. Unreadable, malformed and
+    non-dict files are skipped, so this never raises."""
     import glob as _glob
     import json as _json
     import re as _re
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     latest: dict[str, int] = {}
-    max_round = 0
+    rounds: list[int] = []
     for p in _glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
         m = _re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(p))
         if not m:
@@ -8898,10 +8598,12 @@ def _latest_driver_rows() -> tuple[int, dict[str, int]]:
                 data = _json.load(fh)
         except Exception:
             continue
+        if not isinstance(data, dict):
+            continue
         entries = data.get("queries") or data
         if not isinstance(entries, dict):
             continue
-        max_round = max(max_round, rnd)
+        rounds.append(rnd)
         for name, row in entries.items():
             if not isinstance(row, dict):
                 continue
@@ -8916,136 +8618,21 @@ def _latest_driver_rows() -> tuple[int, dict[str, int]]:
             )
             if green or rows_only_ok:
                 latest[name] = max(latest.get(name, 0), rnd)
-    return max_round, latest
+    return sorted(rounds), latest
 
 
-# Max-staleness rotation invariant (VERDICT r7 item 1, generalizing
-# the r6 rotation-DEBT invariant): the window must be a GREEDY fill
-# by staleness — no query outside the first 50 registry entries may
-# be staler than any query inside them (never-driver-gated = +inf,
-# so the old "never-gated must sit inside the window" rule is the
-# special case) — and nothing outside the window may exceed
-# _MAX_STALENESS rounds unless its whole staleness class overflows
-# the window. Both derived from the artifacts at import, so a
-# violation fails the registry (and every test) the moment the order
-# rots, not at judge time.
-def _check_rotation_invariants(
-    order: list[str],
-    max_round: int,
-    latest: dict[str, int],
-    window: int = _DRIVER_WINDOW,
-    cap: int = _MAX_STALENESS,
-) -> None:
-    """Raise ``RuntimeError`` when ``order`` violates the greedy-fill
-    or staleness-cap rule. Factored out of the module body so the
-    rules themselves are unit-testable with synthetic artifacts
-    (``tests/test_plans.py::test_rotation_invariant_fires``)."""
-    if not max_round:
-        return
-
-    def staleness(name: str) -> float:
-        last = latest.get(name)
-        return float("inf") if last is None else float(max_round + 1 - last)
-
-    inside, outside = order[:window], order[window:]
-    inside_min = min(staleness(q) for q in inside)
-    greedy_violators = [q for q in outside if staleness(q) > inside_min]
-    if greedy_violators:
-        raise RuntimeError(
-            "rotation staleness invariant violated: queries outside "
-            f"the {window}-row driver window are staler than the "
-            f"freshest query inside it (inside min staleness "
-            f"{inside_min}): "
-            + ", ".join(
-                f"{q} (staleness {staleness(q)})"
-                for q in greedy_violators[:10]
-            )
-        )
-    cap_violators = [q for q in outside if staleness(q) >= cap]
-    if cap_violators:
-        raise RuntimeError(
-            "rotation staleness invariant violated: queries at the "
-            f"{cap}-round staleness backstop sit outside the driver "
-            "window (the registry has outgrown the rotation rate — "
-            "stop adding gated queries until the backlog drains): "
-            + ", ".join(
-                f"{q} (staleness {staleness(q)})"
-                for q in cap_violators[:10]
-            )
-        )
+def _gate_order(names: list[str], root: str = _ARTIFACT_ROOT) -> list[str]:
+    """``names`` sorted stalest-first by newest driver-green round
+    (never gated first); the sort is stable, so ties keep the order
+    of ``names``."""
+    _, latest = _latest_driver_rows(root)
+    return sorted(names, key=lambda q: latest.get(q, -1))
 
 
-def _effective_artifact_state(
-    order: list[str],
-    max_round: int,
-    latest: dict[str, int],
-    window: int = _DRIVER_WINDOW,
-) -> tuple[int, dict[str, int], bool]:
-    """Artifact state the invariant should judge THIS order against.
-
-    The newest artifact round is SELF-GATED when its green rows cover
-    most of the current window head — i.e. the driver has already run
-    this very order (it wrote that artifact mid/end-round). Judging
-    the order against an artifact it itself produced inverts the
-    greedy rule the moment the driver writes CORRECTNESS_r{N} (the
-    freshly-gated window reads fresher than everything outside — by
-    design of the rotation!), which would fail the import and brick
-    bench/entry for the rest of the round. So: drop the newest round
-    from the staleness state when it covers ≥ 80% of the window, and
-    report that fact — ``tests/test_plans.py::test_rotation_is_current``
-    turns it into the loud (but non-bricking) "rotate the registry
-    now" forcing function for the next round's first session."""
-    if not max_round:
-        return max_round, latest, False
-    head = set(order[:window])
-    covered = sum(
-        1 for q in head if latest.get(q) == max_round
-    )
-    if covered < 0.8 * min(window, len(order)):
-        return max_round, latest, False
-    # rebuild per-query latest rows EXCLUDING the self-gated round
-    reduced_max, reduced = 0, {}
-    import glob as _glob
-    import json as _json
-    import re as _re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for p in _glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = _re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(p))
-        if not m or int(m.group(1)) == max_round:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(p) as fh:
-                data = _json.load(fh)
-        except Exception:
-            continue
-        entries = data.get("queries") or data
-        if not isinstance(entries, dict):
-            continue
-        reduced_max = max(reduced_max, rnd)
-        for name, row in entries.items():
-            if not isinstance(row, dict):
-                continue
-            green = bool(
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            )
-            rows_only_ok = (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-            )
-            if green or rows_only_ok:
-                reduced[name] = max(reduced.get(name, 0), rnd)
-    return reduced_max, reduced, True
-
-
-_max_round, _latest_rows = _latest_driver_rows()
-_eff_round, _eff_rows, _WINDOW_ALREADY_GATED = _effective_artifact_state(
-    _ORDER, _max_round, _latest_rows
-)
-_check_rotation_invariants(_ORDER, _eff_round, _eff_rows)
+# Registry order = _ALL sorted stalest-first (never driver-gated
+# first, ties in _ALL order), so the driver's window always holds the
+# stalest queries. Promoting a query means adding one _ALL row.
+_ORDER: list[str] = _gate_order(list(_ALL))
 
 REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
     name: _ALL[name] for name in _ORDER

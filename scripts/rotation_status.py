@@ -11,8 +11,6 @@ Usage: python scripts/rotation_status.py        # rewrites README.md
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import re
 import sys
@@ -27,14 +25,10 @@ END = "<!-- rotation-status:end -->"
 def build_section() -> str:
     from datasplash_spark import queries as Q
 
-    # same green criterion as the registry's import-time staleness
-    # invariant — ONE parser, so this report can never disagree with
-    # what the invariant enforces
-    latest_round, latest_green = Q._latest_driver_rows()
-    rounds = sorted(
-        int(re.search(r"_r(\d+)", p).group(1))
-        for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
-    )
+    # the parser that derives the registry order, so this report can
+    # never disagree with it
+    rounds, latest_green = Q._latest_driver_rows()
+    latest_round = rounds[-1] if rounds else 0
 
     names = list(Q.queries())
     rows_only = Q.rows_only()
@@ -82,9 +76,8 @@ def build_section() -> str:
             for n in qnames
         )
         lines.append(f"| {tag} ({len(qnames)}) | {stale} | {shown} |")
-    # staleness histogram (VERDICT r7 item 9): rounds-old at the NEXT
-    # driver run, by window membership — the at-a-glance view of the
-    # greedy-fill invariant's state
+    # staleness histogram: rounds-old at the NEXT driver run, by
+    # window membership
     hist: dict[tuple[str, str], int] = {}
     for n in names:
         last = latest_green.get(n)
@@ -94,10 +87,10 @@ def build_section() -> str:
     lines += [
         "",
         "Staleness histogram (rounds since newest driver row, measured",
-        f"at the next driver run r{latest_round + 1}; the import-time",
-        "invariant in `queries.py` enforces greedy-fill — nothing",
-        "outside the window may be staler than anything inside — and a",
-        "hard in-window backstop at staleness 4):",
+        f"at the next driver run r{latest_round + 1}; `queries.py` sorts",
+        "the registry stalest-first, so nothing outside the window is",
+        "staler than anything inside, and the registry-size cap keeps",
+        f"every query under the staleness backstop of {Q._MAX_STALENESS}):",
         "",
         "| Staleness | In window | Outside |",
         "| --- | --- | --- |",

@@ -929,79 +929,61 @@ def test_edit_verify_length_prefilter_before_levenshtein(spark):
     assert "abs(" in plan and "length(" in plan, plan
 
 
-def test_rotation_invariant_fires():
-    """The greedy-by-staleness rotation invariant (queries.py) must
-    reject (a) a window that skips a staler query, (b) an out-of-
-    window query past the staleness cap when its class would fit,
-    and accept (c) the overflow relief when one staleness class is
-    bigger than the window, plus (d) the live registry order."""
-    import pytest
+def test_gate_order_is_stalest_first(tmp_path):
+    """The registry order is derived from the CORRECTNESS_rNN.json
+    artifacts: never driver-gated queries first, then stalest-first by
+    newest driver-green round, ties in ``_ALL`` order. Derivation never
+    raises on missing, malformed or foreign artifact files."""
+    import json
 
     from datasplash_spark import queries as Q
 
-    check = Q._check_rotation_invariants
-
-    # (a) greedy violation: q0 (never gated, inf) sits OUTSIDE a
-    # 2-row window holding fresher queries
-    latest = {"a": 5, "b": 5, "q0": None}
-    with pytest.raises(RuntimeError, match="staler than"):
-        check(["a", "b", "q0"], max_round=5, latest=latest, window=2)
-    # fixed order passes
-    check(["q0", "a", "b"], max_round=5, latest=latest, window=2)
-
-    # (b) backstop violation: "old" last gated r1 (staleness 5 ≥ the
-    # cap) outside the window — fires even though greedy fill holds
-    # (the window is full of staler never-gated queries): the
-    # registry outgrew the rotation rate
-    latest = {"w1": None, "w2": None, "old": 1}
-    with pytest.raises(RuntimeError, match="backstop"):
-        check(
-            ["w1", "w2", "old"], max_round=5, latest=latest,
-            window=2, cap=3,
+    def write(rnd, rows):
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(
+            json.dumps(rows)
         )
 
-    # (c) below the backstop, greedy fill alone decides: staleness 3
-    # outside a window of never-gated queries passes with cap=4
-    latest = {"n1": None, "n2": None, "mid": 3}
-    check(
-        ["n1", "n2", "mid"], max_round=5, latest=latest, window=2, cap=4
+    green = {"rows_match": True, "schema_match": True, "hash_match": True}
+    red = {**green, "hash_match": False}
+    names = ["a", "b", "c", "d", "e", "new"]
+
+    # no artifacts: nothing is gated, _ALL order stands
+    assert Q._latest_driver_rows(str(tmp_path)) == ([], {})
+    assert Q._gate_order(names, str(tmp_path)) == names
+
+    write(1, {"a": green, "b": green, "c": green, "d": green, "e": green})
+    # the {"queries": {...}} wrapper is read too; a no_oracle row whose
+    # Spark run succeeded counts as green
+    write(2, {"queries": {
+        "b": green, "e": {"err": "no_oracle", "spark_rows": 3},
+    }})
+    # a red row does not refresh staleness: c stays at r1
+    write(3, {"c": red, "d": green})
+    # skipped without raising: malformed JSON, a non-dict payload,
+    # a non-dict "queries" value and a non-matching file name
+    (tmp_path / "CORRECTNESS_r04.json").write_text("{not json")
+    (tmp_path / "CORRECTNESS_r05.json").write_text("[1, 2]")
+    write(6, {"queries": [1]})
+    (tmp_path / "CORRECTNESS_r07_c8.json").write_text(json.dumps({"a": green}))
+
+    rounds, latest = Q._latest_driver_rows(str(tmp_path))
+    assert rounds == [1, 2, 3]
+    assert latest == {"a": 1, "b": 2, "c": 1, "d": 3, "e": 2}
+    assert Q._gate_order(names, str(tmp_path)) == [
+        "new", "a", "c", "b", "e", "d",
+    ]
+
+    # the live registry: the first _DRIVER_WINDOW entries are the
+    # stalest, never-gated ones leading
+    _, latest = Q._latest_driver_rows()
+    head = Q._ORDER[: Q._DRIVER_WINDOW]
+    tail = Q._ORDER[Q._DRIVER_WINDOW:]
+    age = [latest.get(q, -1) for q in Q._ORDER]
+    assert age == sorted(age)
+    assert max(latest.get(q, -1) for q in head) <= min(
+        latest.get(q, -1) for q in tail
     )
-
-    # (d) the live registry order passes against the real artifacts
-    # (the effective state — the self-gated newest round excluded)
-    check(Q._ORDER, Q._eff_round, Q._eff_rows)
-
-    # (e) self-gating detection: when the newest artifact round
-    # covers the window head, the effective state drops that round
-    # (re-derived from the remaining real artifacts) and flags it
-    fake = dict(Q._latest_rows)
-    for q in Q._ORDER[:50]:
-        fake[q] = 99
-    er, rows, gated = Q._effective_artifact_state(Q._ORDER, 99, fake)
-    assert gated and er < 99
-    check(Q._ORDER, er, rows)  # order still judged valid vs history
-    # and a NON-covering newest round passes through untouched
-    er2, rows2, gated2 = Q._effective_artifact_state(
-        Q._ORDER, Q._max_round, Q._latest_rows
-    )
-    assert not gated2 and er2 == Q._max_round and rows2 == Q._latest_rows
-
-
-def test_rotation_is_current():
-    """The loud-but-non-bricking forcing function: once the driver
-    has gated the current window (the newest CORRECTNESS artifact
-    covers it), the NEXT session must rotate the registry — this
-    test fails with instructions while import/bench/entry keep
-    working (the import-time invariant judges the order against the
-    pre-gating artifact state instead of bricking mid-round)."""
-    from datasplash_spark import queries as Q
-
-    assert not Q._WINDOW_ALREADY_GATED, (
-        f"CORRECTNESS_r{Q._max_round:02d}.json has gated the current "
-        "driver window: rotate the registry (stalest block first, "
-        "see the greedy-fill comment above _NEW_R13) and update "
-        "_NEW_R{next} before adding gated queries"
-    )
+    assert list(Q.REGISTRY) == Q._ORDER and set(Q.REGISTRY) == set(Q._ALL)
 
 
 def test_registry_headroom():
