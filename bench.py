@@ -127,6 +127,30 @@ def _emit(payload: dict) -> None:
     print(json.dumps(payload))
 
 
+def _local_artifact(here: str, rnd: int, slots: int) -> str:
+    """The full-timings artifact of round ``rnd`` at ``slots`` task
+    slots (``defaultParallelism``): runs at different slot counts
+    land side by side, never in each other's file."""
+    return os.path.join(here, f"BENCH_LOCAL_r{rnd:02d}_c{slots}.json")
+
+
+def _prev_local_artifact(here: str, cur_round: int, slots: int) -> str | None:
+    """The newest :func:`_local_artifact` in ``here`` from a round
+    strictly below ``cur_round`` at the SAME slot count, or None —
+    walls are only comparable at one slot count. Names match on the
+    basename only, so a checkout path holding ``_r<digits>`` cannot
+    win the filter or the sort."""
+    import re
+
+    rounds = {
+        int(m.group(1)): f
+        for f in os.listdir(here)
+        if (m := re.fullmatch(rf"BENCH_LOCAL_r(\d+)_c{slots}\.json", f))
+        and int(m.group(1)) < cur_round
+    }
+    return os.path.join(here, rounds[max(rounds)]) if rounds else None
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
@@ -395,32 +419,16 @@ def main() -> int:
 
     # PREVIOUS round's per-query walls AND executor-cpu seconds, for
     # the >1.5×-mover re-rep rule (missing/failed entries simply get
-    # no comparison): the newest BENCH_LOCAL_r*.json whose round is
-    # STRICTLY below the round being stamped. The round regex runs on
-    # the BASENAME only (ADVICE r12: a checkout path containing
-    # '_r<digits>' would otherwise win both the filter and the sort).
+    # no comparison): the newest local artifact at THIS slot count
+    # whose round is STRICTLY below the round being stamped
+    # (_prev_local_artifact).
     prev_walls: dict[str, float] = {}
     prev_cpu: dict[str, float] = {}
+    _slots = spark.sparkContext.defaultParallelism
     try:
-        import glob as _glob
-
-        def _local_round(p: str) -> int:
-            return int(
-                _re.search(r"_r(\d+)", os.path.basename(p)).group(1)
-            )
-
-        _locals = sorted(
-            (
-                p
-                for p in _glob.glob(
-                    os.path.join(_here, "BENCH_LOCAL_r*.json")
-                )
-                if _local_round(p) < _cur_round
-            ),
-            key=_local_round,
-        )
-        if _locals:
-            with open(_locals[-1]) as fh:
+        _prev_local = _prev_local_artifact(_here, _cur_round, _slots)
+        if _prev_local:
+            with open(_prev_local) as fh:
                 _prev_payload = json.load(fh)
             prev_walls = {
                 k: v
@@ -433,7 +441,7 @@ def main() -> int:
                 if isinstance(v, (int, float)) and v > 0
             }
             print(
-                f"# prev-walls source: {os.path.basename(_locals[-1])} "
+                f"# prev-walls source: {os.path.basename(_prev_local)} "
                 f"(stamping round {_cur_round})",
                 file=sys.stderr,
             )
@@ -617,11 +625,12 @@ def main() -> int:
     # truncated ~30 of the printed timings in r4 AND r5 — the
     # printed line stays the full driver contract, the file is the
     # loss-proof history). Round = 1 + highest driver-recorded
-    # BENCH_rNN.json in the repo root.
+    # BENCH_rNN.json in the repo root; the name also carries the slot
+    # count (_local_artifact).
     try:
         # same round the prev-walls lookup used (computed once,
         # before the query loop)
-        local = os.path.join(_here, f"BENCH_LOCAL_r{_cur_round:02d}.json")
+        local = _local_artifact(_here, _cur_round, _slots)
         with open(local, "w") as fh:
             # reps lives only here, NOT in the printed driver line —
             # the driver's tail capture already truncates long lines

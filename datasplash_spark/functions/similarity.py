@@ -548,16 +548,14 @@ def materialize_ivf(
             _col(id_col).alias("vec_id"), "cell"
         ).join(codes, "vec_id")
     assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
-    # centroids sidecar written THROUGH Spark (one row, one file) so
-    # the store works on any Hadoop filesystem (s3a/hdfs/...), not
-    # just local paths; the _-prefixed directory is invisible to the
-    # parquet reader
-    spark = df.sparkSession
-    (
-        spark.createDataFrame([(json.dumps(centroids),)], "v string")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .text(os.path.join(path, "_ivf_centroids"))
+    # centroids sidecar written driver-side through the Hadoop
+    # FileSystem API (no Spark job), so the store works on any Hadoop
+    # filesystem (s3a/hdfs/...), not just local paths; the _-prefixed
+    # directory is invisible to the parquet reader
+    _write_sidecar_text(
+        df.sparkSession,
+        os.path.join(path, "_ivf_centroids"),
+        json.dumps(centroids),
     )
     return centroids
 
@@ -674,13 +672,43 @@ def _store_key(spark, path: str) -> tuple:
     return (path, mtime, listing)
 
 
+def _write_sidecar_text(spark, dir_path: str, line: str) -> None:
+    """Write a one-row text sidecar (_ivf_centroids / _postings_stats)
+    DRIVER-SIDE through the Hadoop FileSystem API — the mirror of
+    :func:`_read_sidecar_text`, and no Spark job (a
+    ``createDataFrame(...).write.text`` paid a whole scheduled job
+    for <1 KB on every store write). The layout is the one a Spark
+    text write leaves: ``part-00000.txt`` (the line plus a newline)
+    and ``_SUCCESS``, so ``spark.read.text`` still reads it. The files go
+    into a ``<dir>.staging`` sibling first; the old directory is then
+    removed and the staging directory renamed into place, so readers
+    never see a half-written part file. A staging directory left by a
+    crashed write is cleared by the next write."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path
+    final = hpath(dir_path.rstrip("/"))
+    staging = hpath(final.toString() + ".staging")
+    fs = final.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs.delete(staging, True)
+    out = fs.create(hpath(staging, "part-00000.txt"), True)
+    try:
+        jvm.org.apache.commons.io.IOUtils.write(line + "\n", out, "UTF-8")
+    finally:
+        out.close()
+    fs.create(hpath(staging, "_SUCCESS"), True).close()
+    fs.delete(final, True)
+    if not fs.rename(staging, final):
+        raise IOError(f"could not move sidecar {staging} to {final}")
+
+
 def _read_sidecar_text(spark, dir_path: str):
     """First line of a one-row text sidecar (_ivf_centroids /
     _postings_stats) read DRIVER-SIDE through the Hadoop FileSystem
     API — no Spark job (r13 optimization: each store probe paid a
     whole scheduled job, ~0.2 s, to read a <1 KB metadata file).
-    Falls back to ``spark.read.text`` on any surprise (exotic fs,
-    multi-part or compressed sidecars). The fast path only accepts a
+    :func:`_write_sidecar_text` writes what this reads. Falls back
+    to ``spark.read.text`` on any surprise (exotic fs, multi-part or
+    compressed sidecars). The fast path only accepts a
     line that parses as JSON — every caller stores JSON, and a
     COMPRESSED single part file (``part-*.txt.gz``) would otherwise
     pass the name filter, decode to garbage without raising, and
@@ -2489,14 +2517,15 @@ def embedding_audit(
     )
 
 
-def _anti_join_store_ids(df: DataFrame, path: str, id_name: str) -> DataFrame:
-    """Drop incoming rows whose id already exists in the store — the
-    batch-append id ledger (the store IS the ledger, same discipline
-    as the streaming admitters). One id-column scan of the store per
-    append; columnar, so the vectors never load."""
-    existing = df.sparkSession.read.parquet(path).select(
-        F.col(id_name).alias(id_name)
-    )
+def _anti_join_store_ids(
+    df: DataFrame, store: DataFrame, id_name: str
+) -> DataFrame:
+    """Drop incoming rows whose id already exists in ``store`` (the
+    store's ``spark.read.parquet`` frame) — the batch-append id
+    ledger (the store IS the ledger, same discipline as the streaming
+    admitters). One id-column scan of the store per append; columnar,
+    so the vectors never load."""
+    existing = store.select(F.col(id_name).alias(id_name))
     return df.join(existing, on=id_name, how="left_anti")
 
 
@@ -2535,10 +2564,13 @@ def append_ivf(
 
     spark = df.sparkSession
     centroids = json.loads(
-        spark.read.text(os.path.join(path, "_ivf_centroids")).first()[0]
+        _read_sidecar_text(spark, os.path.join(path, "_ivf_centroids"))
     )
+    # one listing + schema inference serves both the id ledger and the
+    # layout check below
+    store = spark.read.parquet(path)
     if skip_existing_ids:
-        df = _anti_join_store_ids(df, path, id_col)
+        df = _anti_join_store_ids(df, store, id_col)
         if df.isEmpty():
             return
     assigned = (
@@ -2546,7 +2578,7 @@ def append_ivf(
         .withColumn("cell", ivf_cell(vec_col, centroids, norm_col=F.col("_nv")))
         .drop("_nv")
     )
-    quantized = "codes" in spark.read.parquet(path).columns
+    quantized = "codes" in store.columns
     if quantized:
         codes = quantize_embeddings(df, vec_col, id_col)
         assigned = assigned.select(
@@ -2572,7 +2604,8 @@ def append_lsh(
     files untouched, probes keep pruning). Same id-ledger replay
     idempotence as :func:`append_ivf` (``skip_existing_ids``)."""
     if skip_existing_ids:
-        df = _anti_join_store_ids(df, path, id_col)
+        store = df.sparkSession.read.parquet(path)
+        df = _anti_join_store_ids(df, store, id_col)
         if df.isEmpty():
             return
     if dim is None:

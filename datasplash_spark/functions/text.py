@@ -1776,11 +1776,10 @@ def _write_postings_stats(spark, path: str, stats: dict) -> None:
     import json
     import os
 
-    (
-        spark.createDataFrame([(json.dumps(stats),)], "v string")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .text(os.path.join(path, "_postings_stats"))
+    from .similarity import _write_sidecar_text
+
+    _write_sidecar_text(
+        spark, os.path.join(path, "_postings_stats"), json.dumps(stats)
     )
 
 
@@ -1815,11 +1814,11 @@ def append_postings(
     import os
 
     from .dedup import md5_int31
+    from .similarity import _read_sidecar_text
 
     spark = df.sparkSession
     prev = json.loads(
-        spark.read.text(os.path.join(path, "_postings_stats"))
-        .collect()[0][0]
+        _read_sidecar_text(spark, os.path.join(path, "_postings_stats"))
     )
     if "sum_dl" not in prev:
         raise ValueError(
@@ -2029,6 +2028,8 @@ def convert_postings_layout(
     import json
     import os
 
+    from .similarity import _read_sidecar_text
+
     if to not in ("batch", "stream"):
         raise ValueError(f"convert_postings_layout: unknown target {to!r}")
     sc = spark.sparkContext
@@ -2097,8 +2098,7 @@ def convert_postings_layout(
         else:
             fs.rename(p, dst)
     prev = json.loads(
-        spark.read.text(os.path.join(path, "_postings_stats"))
-        .collect()[0][0]
+        _read_sidecar_text(spark, os.path.join(path, "_postings_stats"))
     )
     row = (
         spark.read.parquet(path)
@@ -2299,14 +2299,15 @@ def bm25_batch_from_store(
     import json
     import os
 
+    from .similarity import _read_sidecar_text
+
     if not queries or any(not ts for ts in queries.values()):
         raise ValueError(
             "bm25_batch_from_store: queries must be non-empty with"
             " non-empty terms"
         )
     stats = json.loads(
-        spark.read.text(os.path.join(path, "_postings_stats"))
-        .collect()[0][0]
+        _read_sidecar_text(spark, os.path.join(path, "_postings_stats"))
     )
     n_buckets = int(stats["n_buckets"])
     pairs = sorted({(str(q), str(t)) for q, ts in queries.items() for t in ts})

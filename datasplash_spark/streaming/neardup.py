@@ -579,7 +579,9 @@ def postings_admitter(
     write, the stats sidecar RECOMPUTES from the full store
     (idempotent by construction — no merge state to corrupt on
     replay): one distinct (doc_id, dl) aggregate, store-sized but
-    postings-narrow.
+    postings-narrow. The stats line itself is written driver-side
+    through the Hadoop FileSystem API (``_write_postings_stats``),
+    so the refresh schedules no job beyond that aggregate.
 
     Caveats vs the batch path (:func:`..functions.text
     .append_postings`): documents with zero tokens produce no

@@ -6614,6 +6614,78 @@ def test_sidecar_fastpath_requires_json(spark, tmp_path):
     assert sim._read_sidecar_text(spark, str(d)) == line
 
 
+def _part_files(d):
+    return sorted(p.name for p in d.iterdir() if p.name.startswith("part-"))
+
+
+def test_sidecar_writer_round_trips(spark, tmp_path):
+    """The driver-side sidecar writer leaves the layout a Spark text
+    write leaves: the line reads back equal through the fast reader
+    and through spark.read.text, and a rewrite leaves exactly one
+    part file holding the new line."""
+    import json
+
+    d = tmp_path / "store" / "_postings_stats"
+    first = json.dumps({"n_docs": 3, "avgdl": 2.5, "term": "café"})
+    sim._write_sidecar_text(spark, str(d), first)
+    assert (d / "_SUCCESS").exists()
+    assert sim._read_sidecar_text(spark, str(d)) == first
+    assert spark.read.text(str(d)).first()[0] == first
+    second = json.dumps({"n_docs": 4, "avgdl": 3.0})
+    sim._write_sidecar_text(spark, str(d), second)
+    assert _part_files(d) == ["part-00000.txt"]
+    assert (d / "part-00000.txt").read_text("utf-8") == second + "\n"
+    assert sim._read_sidecar_text(spark, str(d)) == second
+    assert [r[0] for r in spark.read.text(str(d)).collect()] == [second]
+    assert [p.name for p in d.parent.iterdir()] == ["_postings_stats"]
+
+
+def test_sidecar_writer_survives_crashed_staging(spark, tmp_path):
+    """A staging directory left behind by a crashed write (garbled,
+    no _SUCCESS) neither hides the committed sidecar from a read nor
+    breaks the next write, which clears it."""
+    import json
+
+    d = tmp_path / "_ivf_centroids"
+    old = json.dumps([[1.0, 0.0], [0.0, 1.0]])
+    sim._write_sidecar_text(spark, str(d), old)
+    staging = tmp_path / "_ivf_centroids.staging"
+    staging.mkdir()
+    (staging / "part-00000.txt").write_text("{half a li")
+    assert sim._read_sidecar_text(spark, str(d)) == old
+    new = json.dumps([[0.6, 0.8], [0.8, 0.6]])
+    sim._write_sidecar_text(spark, str(d), new)
+    assert not staging.exists()
+    assert _part_files(d) == ["part-00000.txt"]
+    assert sim._read_sidecar_text(spark, str(d)) == new
+    assert spark.read.text(str(d)).first()[0] == new
+
+
+def test_sidecar_io_schedules_no_jobs(spark, tmp_path):
+    """Writing the postings stats and reading both store sidecars
+    stays on the driver: zero Spark jobs under the job group."""
+    import json
+
+    store = str(tmp_path / "store")
+    stats = tx._postings_stats_dict(5, 17, 5, 8)
+    cents = [[1.0, 0.0], [0.0, 1.0]]
+    sc = spark.sparkContext
+    group = "sidecar-io-no-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        tx._write_postings_stats(spark, store, stats)
+        sim._write_sidecar_text(
+            spark, store + "/_ivf_centroids", json.dumps(cents)
+        )
+        got_stats = sim._read_sidecar_text(spark, store + "/_postings_stats")
+        got_cents = sim._read_sidecar_text(spark, store + "/_ivf_centroids")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert json.loads(got_stats) == stats
+    assert json.loads(got_cents) == cents
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_pair_width_gate_drops_malformed_rows(spark):
     """ADVICE r13: a vector WIDER than the centroid dimension must
     DROP out of the pair stage (the fold's null-pad behavior), not

@@ -1391,3 +1391,10 @@ def test_log_extract_bytes_never_shuffle(spark):
     exch = [l for l in plan.splitlines() if "Exchange" in l]
     assert "media" not in "".join(exch), exch
     assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan, plan
+
+
+def test_make_session_caps_codegen_method_size(spark):
+    """make_session (which builds the test session) aligns whole-stage
+    codegen's fallback with HotSpot's 8000-byte JIT limit; Spark's own
+    default (65535) would leave oversized fused stages interpreted."""
+    assert spark.conf.get("spark.sql.codegen.hugeMethodLimit") == "8000"
