@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.elementwise import ColumnLike, _col
+from ..pipeline import read_parquet_memo
 
 
 def _sql_double(x: float) -> str:
@@ -594,7 +595,7 @@ def ivf_topk_from_store(
             f"store dimension {len(centroids[0])}"
         )
     probe = _rank_cells(centroids, query_vec, nprobe)
-    store = _read_store(spark, path).filter(F.col("cell").isin(probe))
+    store = read_parquet_memo(spark, path).filter(F.col("cell").isin(probe))
     if "codes" in store.columns:
         # quantized layout (materialize_ivf(quantize=True)): quantize
         # the query driver-side (round half away from zero, matching
@@ -620,56 +621,6 @@ def ivf_topk_from_store(
         store, query_vec, k, vec_col, id_col,
         trusted_dim=len(centroids[0]) if centroids else None,
     )
-
-
-#: (path, dir mtime, top-level (name, len, mtime) listing) -> StructType.
-#: Metadata only — never rows or results. See _read_store.
-_STORE_SCHEMA_CACHE: dict = {}
-
-#: (applicationId, store key) -> the base DataFrame for the store.
-#: Caches FILE-LISTING metadata, not data: ``spark.read.parquet``
-#: builds a fresh InMemoryFileIndex per call — a full recursive
-#: listing of every partition directory, paid driver-side on EVERY
-#: probe of the serving loop (measured the dominant fixed cost of the
-#: 64-partition LSH store probe). Reusing the resolved relation
-#: reuses that listing; each probe still plans its own partition
-#: pruning and scans the parquet itself. Invalidation is the same
-#: content-derived key as the schema memo (rewrite OR in-place
-#: append changes it — see :func:`_store_key`); keyed additionally
-#: by applicationId because a DataFrame dies with its session.
-_STORE_DF_CACHE: dict = {}
-
-
-def _store_key(spark, path: str) -> tuple:
-    """Content-derived cache key for a store directory (ADVICE r13:
-    directory mtime alone has 1 s granularity on many filesystems, so
-    a store overwritten with a different schema within the same second
-    could serve a stale cached schema). The key adds the sorted
-    (name, length, mtime) listing of the directory's top-level
-    entries — ``mode("overwrite")`` rewrites produce new part
-    names/sizes, and an ``append_*`` into an EXISTING ``cell=``/
-    ``bucket=``/``term_bucket=`` partition dir bumps that subdir's
-    mtime (adding an entry to a directory updates its mtime), so both
-    rewrite and in-place growth change the key (the latter matters
-    for the r14 file-listing memo below, which must never serve a
-    listing that misses appended part files). One listStatus per
-    probe, the same metadata round-trip ``_read_sidecar_text``
-    already pays."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    mtime = int(fs.getFileStatus(jpath).getModificationTime())
-    listing = tuple(
-        sorted(
-            (
-                st.getPath().getName(),
-                int(st.getLen()),
-                int(st.getModificationTime()),
-            )
-            for st in fs.listStatus(jpath)
-        )
-    )
-    return (path, mtime, listing)
 
 
 def _write_sidecar_text(spark, dir_path: str, line: str) -> None:
@@ -743,59 +694,6 @@ def _read_sidecar_text(spark, dir_path: str):
     return spark.read.text(dir_path).first()[0]
 
 
-def _read_store(spark, path: str) -> DataFrame:
-    """Read an ANN store's parquet, converting the opaque
-    UNABLE_TO_INFER_SCHEMA an empty store raises (only _SUCCESS on
-    disk — the input frame had no rows at write time) into a clear
-    error.
-
-    The store SCHEMA is memoized per (path, dir mtime, top-level
-    (name, len) listing — see :func:`_store_key`) so re-probing the
-    same store — the serving shape — skips the per-call footer/schema
-    inference (~0.1 s on local fs, more on object stores).
-    ``mode("overwrite")`` recreates the directory with fresh part
-    names, so a rewrite invalidates the entry even within mtime
-    granularity; only metadata is cached, every probe still scans
-    the parquet itself."""
-    from pyspark.errors import AnalysisException
-
-    key = None
-    df_key = None
-    try:
-        key = _store_key(spark, path)
-        df_key = (spark.sparkContext.applicationId, key)
-        cached_df = _STORE_DF_CACHE.get(df_key)
-        if cached_df is not None:
-            return cached_df
-        cached = _STORE_SCHEMA_CACHE.get(key)
-        if cached is not None:
-            df = spark.read.schema(cached).parquet(path)
-            if len(_STORE_DF_CACHE) > 64:
-                _STORE_DF_CACHE.clear()
-            _STORE_DF_CACHE[df_key] = df
-            return df
-    except Exception:  # noqa: BLE001 - fs oddity -> uncached path
-        key = None
-        df_key = None
-    try:
-        df = spark.read.parquet(path)
-    except AnalysisException as e:
-        if "UNABLE_TO_INFER_SCHEMA" in str(e):
-            raise ValueError(
-                f"ANN store at {path!r} is empty (written from a "
-                "frame with no rows) — nothing to probe"
-            ) from e
-        raise
-    if key is not None:
-        if len(_STORE_SCHEMA_CACHE) > 64:
-            _STORE_SCHEMA_CACHE.clear()
-        _STORE_SCHEMA_CACHE[key] = df.schema
-        if len(_STORE_DF_CACHE) > 64:
-            _STORE_DF_CACHE.clear()
-        _STORE_DF_CACHE[df_key] = df
-    return df
-
-
 def materialize_lsh(
     df: DataFrame,
     path: str,
@@ -857,7 +755,7 @@ def lsh_topk_from_store(
     ]
     flips = [i for _, i in sorted(margins)]
     probe = [qbucket] + [qbucket ^ (1 << i) for i in flips[: max(0, nprobe - 1)]]
-    store = _read_store(spark, path).filter(F.col("bucket").isin(probe))
+    store = read_parquet_memo(spark, path).filter(F.col("bucket").isin(probe))
     # the store's dimension is fixed by the planes' (write-time) dim;
     # a query of a different width would probe garbage buckets anyway,
     # so the store contract already requires matching dims

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.elementwise import ColumnLike, _col
+from ..pipeline import read_parquet_memo
 
 #: tiny per-language stopword lists for the n-gram/stopword language
 #: heuristic. Deliberately small + deterministic (oracle replicates).
@@ -2144,9 +2145,7 @@ def bm25_from_store(
     n_buckets = int(stats["n_buckets"])
     terms = sorted({str(t) for t in query_terms})
     buckets = sorted({_term_bucket_py(t, n_buckets) for t in terms})
-    from .similarity import _read_store
-
-    post = _read_store(spark, path).where(
+    post = read_parquet_memo(spark, path).where(
         F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
     )
     dfreq = post.groupBy("term").agg(F.count(F.lit(1)).alias("dfq"))

@@ -187,24 +187,9 @@ def make_session(options: PipelineOptions | None = None) -> SparkSession:
     return spark
 
 
-#: (path, mtime, size-or-listing) -> StructType. Metadata only (the
-#: same discipline as the ANN-store schema memo in
-#: functions/similarity.py): every read still scans the parquet; a
-#: rewrite changes mtime/size/part names and invalidates the entry.
-_TABLE_SCHEMA_CACHE: dict = {}
-
-#: (applicationId, content key) -> base DataFrame. Extends the schema
-#: memo to the RESOLVED RELATION (r14 continuation): even with the
-#: schema known, every ``spark.read.parquet`` call re-runs DataSource
-#: resolution and rebuilds the file index — ~20 ms of driver time per
-#: load_table call, paid by every query build (1-3 tables each).
-#: METADATA only (file listing + schema, never rows — each action
-#: still scans the parquet); the key is content-derived (path, mtime_ns
-#: and size of the file, or the per-entry (name, size, mtime_ns)
-#: top-level listing for directories), so a rewrite OR an in-place
-#: append invalidates; keyed by applicationId because a DataFrame dies
-#: with its context.
-_TABLE_DF_CACHE: dict = {}
+#: (applicationId, path, mtime, listing) -> resolved base DataFrame; see
+#: read_parquet_memo. Holds file-listing metadata and schema, never rows.
+_RELATION_CACHE: dict = {}
 
 #: id(base events DataFrame) -> (base, ts-normalized DataFrame); see
 #: load_table. Entries hold the base, so the id cannot be recycled
@@ -212,48 +197,69 @@ _TABLE_DF_CACHE: dict = {}
 _EVENTS_TS_CACHE: dict = {}
 
 
-def _read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet`` with the SCHEMA and the resolved base
-    relation memoized per file content-key (r14, guide §1.2/§6):
-    schema inference runs a driver-side footer-read job per call, and
-    relation resolution rebuilds the file index — together the first
-    ~30-100 ms of EVERY query. One fixed cost per table load that the
-    memo removes for repeat loads of an unchanged file. Falls back to
-    plain inference on any fs surprise."""
-    key = None
-    df_key = None
+def read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the resolved relation memoized.
+
+    Every ``spark.read.parquet`` call infers the schema (a footer-read
+    job) and rebuilds the file index (a recursive listing of every
+    partition directory). That is ~20-100 ms of driver time per call,
+    paid by every query build (``load_table``) and every store probe
+    of a serving loop. The memo returns the same DataFrame for an
+    unchanged path. It caches metadata only: each action still scans
+    the parquet.
+
+    Key contract. The key is ``(path, mtime, listing)`` from the Hadoop
+    FileSystem, where ``listing`` is the sorted ``(name, length,
+    mtime)`` of the path's top-level entries (for a single file, the
+    file itself). It is keyed also by applicationId, because a
+    DataFrame dies with its context. Every Spark write changes the key:
+    a commit rewrites the top-level ``_SUCCESS``, and new part files or
+    whole renamed partition directories change the listing or an
+    entry's mtime. That covers ``mode("overwrite")``, appends into an
+    existing ``cell=``/``bucket=`` partition, and the two-level
+    ``_batch_id=/term_bucket=`` dynamic overwrite of the postings
+    admitter. An out-of-band in-place edit of a file inside a
+    partition directory is NOT seen. Catching it would need a
+    recursive listing, a per-read py4j cost on every probe, for a case
+    no writer in this package produces.
+
+    Any error while computing the key gives an uncached read. A
+    directory holding only ``_SUCCESS`` (written from a frame with no
+    rows) raises a ``ValueError`` instead of Spark's opaque
+    UNABLE_TO_INFER_SCHEMA."""
+    from pyspark.errors import AnalysisException
+
     try:
-        st = os.stat(path)
-        if os.path.isdir(path):
-            listing = tuple(sorted(
-                (e.name, e.stat().st_size, e.stat().st_mtime_ns)
-                for e in os.scandir(path)
-            ))
-            key = (path, int(st.st_mtime_ns), listing)
-        else:
-            key = (path, int(st.st_mtime_ns), st.st_size)
-        df_key = (spark.sparkContext.applicationId, key)
-        cached_df = _TABLE_DF_CACHE.get(df_key)
-        if cached_df is not None:
-            return cached_df
-        cached = _TABLE_SCHEMA_CACHE.get(key)
-        if cached is not None:
-            df = spark.read.schema(cached).parquet(path)
-            if len(_TABLE_DF_CACHE) > 64:
-                _TABLE_DF_CACHE.clear()
-            _TABLE_DF_CACHE[df_key] = df
-            return df
-    except OSError:  # exotic fs / remote path -> plain inference
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        mtime = int(fs.getFileStatus(jpath).getModificationTime())
+        listing = tuple(sorted(
+            (
+                st.getPath().getName(),
+                int(st.getLen()),
+                int(st.getModificationTime()),
+            )
+            for st in fs.listStatus(jpath)
+        ))
+        key = (spark.sparkContext.applicationId, path, mtime, listing)
+    except Exception:  # noqa: BLE001 - fs oddity -> uncached read
         key = None
-        df_key = None
-    df = spark.read.parquet(path)
+    cached = _RELATION_CACHE.get(key)
+    if cached is not None:
+        return cached
+    try:
+        df = spark.read.parquet(path)
+    except AnalysisException as e:
+        if "UNABLE_TO_INFER_SCHEMA" in str(e):
+            raise ValueError(
+                f"parquet at {path!r} holds no data files (written from "
+                "a frame with no rows): nothing to read"
+            ) from e
+        raise
     if key is not None:
-        if len(_TABLE_SCHEMA_CACHE) > 64:
-            _TABLE_SCHEMA_CACHE.clear()
-        _TABLE_SCHEMA_CACHE[key] = df.schema
-        if len(_TABLE_DF_CACHE) > 64:
-            _TABLE_DF_CACHE.clear()
-        _TABLE_DF_CACHE[df_key] = df
+        if len(_RELATION_CACHE) > 64:
+            _RELATION_CACHE.clear()
+        _RELATION_CACHE[key] = df
     return df
 
 
@@ -278,7 +284,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _read_parquet_memo(spark, path)
+        df = read_parquet_memo(spark, path)
         # the ts normalization below is a pure function of the base
         # relation — memoize it per base object (the base is itself
         # memoized per content key, so a rewrite yields a new base and
@@ -305,7 +311,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # the hit path verify identity, not just address equality
         _EVENTS_TS_CACHE[id(base)] = (base, df)
         return df
-    return _read_parquet_memo(spark, path)
+    return read_parquet_memo(spark, path)
 
 
 def spread_scan(df: DataFrame, *keys: str) -> DataFrame:

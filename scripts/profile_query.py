@@ -5,10 +5,11 @@ Usage: python scripts/profile_query.py [--tag before] [--reps 3]
            [--no-plan] name [name ...]
 
 For each registry query: build the DataFrame, write its
-``explain("formatted")`` to ``plans/r13/<name>_<tag>.txt``, run the
-bench's timed action (``.count()``) ``reps`` times with the bench's
-inter-measurement hygiene, and print per-stage wall/cpu from the
-AppStatusStore so the expensive stage is visible without a UI.
+``explain("formatted")`` to ``plans/<plan-dir>/<name>_<tag>.txt``
+(``--plan-dir`` defaults to ``tmp``; ``plans/*tmp/`` is git-ignored),
+run the bench's timed action (``.count()``) ``reps`` times with the
+bench's inter-measurement hygiene, and print per-stage wall/cpu from
+the AppStatusStore so the expensive stage is visible without a UI.
 """
 
 from __future__ import annotations
@@ -90,8 +91,9 @@ def main() -> int:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--jobs", action="store_true",
                     help="print the per-job breakdown of the last rep")
-    ap.add_argument("--plan-dir", default="r13",
-                    help="plans/<dir> for --tag output")
+    ap.add_argument("--plan-dir", default="tmp",
+                    help="plans/<dir> for --tag output (plans/*tmp/ is "
+                         "git-ignored)")
     args = ap.parse_args()
 
     spark = make_session(PipelineOptions(

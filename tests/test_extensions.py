@@ -11,6 +11,7 @@ from datasplash_spark.functions import dedup as dd
 from datasplash_spark.functions import multimodal as mm
 from datasplash_spark.functions import similarity as sim
 from datasplash_spark.functions import text as tx
+from datasplash_spark.pipeline import read_parquet_memo
 from datasplash_spark.sources import generate_input
 from datasplash_spark import operators as ops
 
@@ -1201,16 +1202,16 @@ def test_trusted_dim_paths_match_fold_paths(spark, tmp_path):
         for r in sim.quantized_topk(codes, qc, 8, trusted_dim=len(qc)).collect()
     ]
     assert trusted == probed
-    # schema memo: a rewrite at the same path must not serve the old
-    # schema (mtime-keyed invalidation)
+    # relation memo: a rewrite at the same path must not serve the old
+    # schema (content-keyed invalidation)
     store = str(tmp_path / "ivf_rw")
     cents = sim.materialize_ivf(df, store, n_cells=4)
-    assert "embedding" in sim._read_store(spark, store).columns
+    assert "embedding" in read_parquet_memo(spark, store).columns
     import time as _time
 
     _time.sleep(1.1)  # fs mtime granularity
     sim.materialize_ivf(df, store, n_cells=4, centroids=cents, quantize=True)
-    cols = sim._read_store(spark, store).columns
+    cols = read_parquet_memo(spark, store).columns
     assert "codes" in cols and "embedding" not in cols
     # sidecar fast path == the Spark-job read
     side = store + "/_ivf_centroids"
@@ -3626,10 +3627,10 @@ def test_append_postings_matches_union_inline(spark, tmp_path):
 def test_store_listing_memo_identity_and_append_invalidation(
     spark, tmp_path
 ):
-    """r14 probe optimization: ``_read_store`` memoizes the resolved
-    base relation (file listing + schema — METADATA only, never rows)
-    per content-derived store key, so the serving loop's repeated
-    probes skip the per-call recursive file listing. An in-place
+    """r14 probe optimization: ``read_parquet_memo`` memoizes the
+    resolved base relation (file listing + schema — METADATA only,
+    never rows) per content-derived store key, so the serving loop's
+    repeated probes skip the per-call recursive file listing. An in-place
     append into an EXISTING partition directory must invalidate the
     memo (each top-level entry's mtime is part of the key) so probes
     never serve a listing that misses appended part files."""
@@ -3639,9 +3640,9 @@ def test_store_listing_memo_identity_and_append_invalidation(
     )
     store = str(tmp_path / "ivf_memo")
     sim.materialize_ivf(df, store, n_cells=2)
-    d1 = sim._read_store(spark, store)
+    d1 = read_parquet_memo(spark, store)
     # memo hit: the SAME resolved relation (no re-listing)
-    assert sim._read_store(spark, store) is d1
+    assert read_parquet_memo(spark, store) is d1
     n1 = d1.count()
     import time as _time
 
@@ -3652,7 +3653,7 @@ def test_store_listing_memo_identity_and_append_invalidation(
         "vec_id bigint, embedding array<double>",
     )
     sim.append_ivf(extra, store, skip_existing_ids=False)
-    d2 = sim._read_store(spark, store)
+    d2 = read_parquet_memo(spark, store)
     assert d2 is not d1  # key changed -> fresh listing
     assert d2.count() == n1 + 5  # appended rows visible
 
@@ -6585,18 +6586,42 @@ def test_quantized_topk_trusted_raises_on_width_mismatch(spark):
 
 
 def test_table_schema_memo_invalidates_on_rewrite(spark, tmp_path):
-    """pipeline._read_parquet_memo caches ONLY the schema, keyed on
-    (path, mtime_ns, size/listing): rewriting the file with a new
-    schema must serve the new schema, not the memo."""
-    from datasplash_spark.pipeline import _read_parquet_memo
-
+    """pipeline.read_parquet_memo caches the resolved relation (schema
+    and file listing), keyed on the path's content (mtime plus the
+    (name, length, mtime) listing, which for a single file is the file
+    itself): an unchanged file is a memo hit, and rewriting the file
+    with a new schema must serve the new schema, not the memo."""
     p = str(tmp_path / "t.parquet")
     spark.createDataFrame([(1,)], "a long").toPandas().to_parquet(p)
-    assert _read_parquet_memo(spark, p).columns == ["a"]
+    d1 = read_parquet_memo(spark, p)
+    assert d1.columns == ["a"]
+    assert read_parquet_memo(spark, p) is d1
     import pandas as pd
 
     pd.DataFrame({"b": [2], "c": [3]}).to_parquet(p)
-    assert sorted(_read_parquet_memo(spark, p).columns) == ["b", "c"]
+    assert sorted(read_parquet_memo(spark, p).columns) == ["b", "c"]
+
+
+def test_empty_parquet_raises_clear_error(spark, tmp_path):
+    """A parquet dir holding only ``_SUCCESS`` (written from a frame
+    with no rows) raises a clear ValueError, not Spark's opaque
+    UNABLE_TO_INFER_SCHEMA: through a store probe and through
+    load_table alike."""
+    from datasplash_spark.pipeline import load_table
+
+    empty = generate_input(
+        spark, [(1, [1.0, 0.0, 0.0, 0.0])],
+        "vec_id bigint, embedding array<double>",
+    ).limit(0)
+    store = str(tmp_path / "lsh_empty")
+    sim.materialize_lsh(empty, store, bits=2, dim=4)
+    with pytest.raises(ValueError, match="holds no data files"):
+        sim.lsh_topk_from_store(spark, store, [1.0, 0.0, 0.0, 0.0], bits=2)
+    table = tmp_path / "t.parquet"
+    table.mkdir()
+    (table / "_SUCCESS").touch()
+    with pytest.raises(ValueError, match="holds no data files"):
+        load_table(spark, str(tmp_path), "t")
 
 
 def test_sidecar_fastpath_requires_json(spark, tmp_path):
