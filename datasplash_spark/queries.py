@@ -28,8 +28,6 @@ from .pipeline import load_table, spread_scan
 from .functions import similarity as sim
 from .functions import text as tx
 from .operators import (
-    approx_distinct_fn,
-    approx_quantile_fn,
     JoinSpec,
     cogroup_by,
     combine,
@@ -590,14 +588,6 @@ def q_partition_by(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_PARTITION_BY = """
 SELECT o_orderkey, o_orderstatus FROM orders WHERE o_orderstatus = 'O'
 """
-
-
-def q_sample_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sample :global fixed-size uniform — engine RNGs differ, so this
-    is a rows-only check (no oracle)."""
-    return sample(_t(spark, sf_dir, "orders"), 100, scope="global").select(
-        "o_orderkey"
-    )
 
 
 def q_sample_global_det(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2613,24 +2603,6 @@ GROUP BY rt.doc_id
 """
 
 
-def q_approx_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable-sketch aggregates per key: HLL distinct + GK median.
-    Deliberately rows-only at the gate (sketch outputs are
-    engine-specific by construction — the exact twins
-    `price_percentiles`/`distinct` carry the value oracle); the
-    sketches partial-aggregate map-side like any combiner, which is
-    their whole point at 100 TB."""
-    li = _t(spark, sf_dir, "lineitem")
-    return combine_by(
-        li,
-        "l_returnflag",
-        approx_distinct_fn(F.col("l_orderkey")).alias("nd_orders"),
-        approx_quantile_fn(F.col("l_quantity"), [0.5]).getItem(0).alias(
-            "median_qty"
-        ),
-    ).withColumnRenamed("key", "l_returnflag")
-
-
 def q_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-pass ingest profile of the documents table: per-column
     counts, exact distincts, min/max — the batch-validation op."""
@@ -3737,34 +3709,6 @@ FROM rk
 """
 
 
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: text bytes as opaque media binary →
-    mapInPandas feature extraction (size + rolling code-point
-    checksum). The decode kernel is the stubbed seam; the Spark
-    plumbing (binary column, Arrow batches, metadata struct) is real."""
-    from .functions import multimodal as mm
-
-    docs = _t(spark, sf_dir, "documents")
-    media = mm.as_media(
-        docs.select("doc_id", F.encode("text", "UTF-8").alias("raw")),
-        "raw",
-        media_type="text/plain",
-    )
-    return mm.media_features(media)
-
-
-ORACLE_MULTIMODAL = f"""
-SELECT doc_id,
-       octet_length(encode(text)) AS n_bytes,
-       list_reduce(
-         list_prepend(0::BIGINT,
-           list_transform(range(1, length(text) + 1),
-                          i -> unicode(text[i:i])::BIGINT)),
-         (a, x) -> (a * 257 + x) % {(1 << 31) - 1}) AS checksum
-FROM documents
-"""
-
-
 def q_ngram_jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate verification: exact n-gram Jaccard over the MinHash
     candidate pairs (the two-stage near-dup pipeline: cheap LSH recall
@@ -3811,15 +3755,6 @@ FROM cand c
 JOIN sh a ON a.doc_id = c.doc_a
 JOIN sh b ON b.doc_id = c.doc_b
 """
-
-
-def q_sample_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sample :scope :per-key (core.clj:1761-1782): fixed-size uniform
-    sample per key — rows-only check (engine RNGs differ)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return sample(li, 3, scope="per-key", key="l_returnflag").select(
-        "l_returnflag", "l_orderkey", "l_linenumber"
-    )
 
 
 def q_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5742,20 +5677,6 @@ def q_image_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_IMAGE_FORMATS = """
-SELECT doc_id,
-       CASE WHEN doc_id % 4 = 0 THEN 'jpeg420'
-            WHEN doc_id % 2 = 0 THEN 'jpeg'
-            ELSE 'png' END AS fmt,
-       CAST(8 + length(text) % 9 AS INT) AS width,
-       CAST(8 + length(text) % 7 AS INT) AS height,
-       CAST(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 3 END AS INT) AS channels,
-       CASE WHEN doc_id % 2 = 0 THEN 'L' ELSE 'RGB' END AS mode,
-       TRUE AS ok
-FROM documents
-"""
-
-
 def q_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image fingerprints over the corpus: synthesize an
     8×8 grayscale PNG per doc (pixels from text code points),
@@ -5770,25 +5691,6 @@ def q_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     media = mm.synthesize_image_from_text(docs, fmt="pngL", size=(8, 8))
     return mm.image_ahash(media).select("doc_id", "px_sum", "ahash")
-
-
-ORACLE_IMAGE_AHASH = """
-WITH px AS (
-  SELECT d.doc_id, t.i,
-         CASE WHEN t.i < length(d.text)
-              THEN ((unicode(substring(d.text, CAST(t.i + 1 AS INT), 1))
-                     + 1) * 2654435761) % 256
-              ELSE 2654435761 % 256 END AS p
-  FROM documents d, (SELECT unnest(range(64)) AS i) t
-), s AS (
-  SELECT doc_id, CAST(SUM(p) AS BIGINT) AS px_sum FROM px GROUP BY doc_id
-)
-SELECT px.doc_id, s.px_sum,
-       string_agg(CASE WHEN px.p * 64 > s.px_sum THEN '1' ELSE '0' END,
-                  '' ORDER BY px.i) AS ahash
-FROM px JOIN s USING (doc_id)
-GROUP BY px.doc_id, s.px_sum
-"""
 
 
 def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6164,52 +6066,6 @@ SELECT doc_id, trim(title) AS title,
        CAST(len(regexp_extract_all(html, '(?is)<a\\s[^>]*href'))
             AS BIGINT) AS n_links
 FROM s
-"""
-
-
-def q_ahash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-duplicate pairs end-to-end: synthesize 8×8 gray
-    PNGs, decode → aHash → banded Hamming join (max 10). The oracle
-    computes the BRUTE-FORCE pair set from the replayed pixel
-    formula — so this gate proves the banding's pigeonhole recall is
-    EXACT at corpus scale, not just that the plumbing runs."""
-    from .functions import multimodal as mm
-
-    docs = _t(spark, sf_dir, "documents")
-    media = mm.synthesize_image_from_text(docs, fmt="pngL", size=(8, 8))
-    sigs = mm.image_ahash(media).select(
-        "doc_id", dd.bitstring64_to_long("ahash").alias("sig")
-    )
-    return dd.hamming_band_pairs(
-        sigs, "sig", max_hamming=10, cache=True
-    ).select("a", "b", F.col("hamming").cast("int").alias("hamming"))
-
-
-ORACLE_AHASH_PAIRS = """
-WITH px AS (
-  SELECT d.doc_id, t.i,
-         CASE WHEN t.i < length(d.text)
-              THEN ((unicode(substring(d.text, CAST(t.i + 1 AS INT), 1))
-                     + 1) * 2654435761) % 256
-              ELSE 2654435761 % 256 END AS p
-  FROM documents d, (SELECT unnest(range(64)) AS i) t
-), s AS (
-  SELECT doc_id, SUM(p) AS px_sum FROM px GROUP BY doc_id
-), h AS (
-  SELECT px.doc_id,
-         string_agg(CASE WHEN px.p * 64 > s.px_sum THEN '1' ELSE '0' END,
-                    '' ORDER BY px.i) AS bits
-  FROM px JOIN s USING (doc_id) GROUP BY px.doc_id
-)
-SELECT a.doc_id AS a, b.doc_id AS b,
-       CAST(len(list_filter(range(64),
-         i -> substring(a.bits, CAST(i + 1 AS INT), 1)
-              <> substring(b.bits, CAST(i + 1 AS INT), 1))) AS INT)
-         AS hamming
-FROM h a JOIN h b ON a.doc_id < b.doc_id
-WHERE len(list_filter(range(64),
-        i -> substring(a.bits, CAST(i + 1 AS INT), 1)
-             <> substring(b.bits, CAST(i + 1 AS INT), 1))) <= 10
 """
 
 

@@ -9,7 +9,8 @@ For each registry query: build the DataFrame, write its
 (``--plan-dir`` defaults to ``tmp``; ``plans/*tmp/`` is git-ignored),
 run the bench's timed action (``.count()``) ``reps`` times with the
 bench's inter-measurement hygiene, and print per-stage wall/cpu from
-the AppStatusStore so the expensive stage is visible without a UI.
+the AppStatusStore (``bench._stage_rows``) so the expensive stage is
+visible without a UI.
 """
 
 from __future__ import annotations
@@ -24,26 +25,9 @@ from contextlib import redirect_stdout
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
+from bench import _hygiene, _stage_rows, warm_workers  # noqa: E402
 from datasplash_spark import queries as Q  # noqa: E402
 from datasplash_spark.pipeline import PipelineOptions, make_session  # noqa: E402
-
-
-def _stage_rows(spark):
-    gw = spark.sparkContext._gateway
-    store = spark._jsparkSession.sparkContext().statusStore()
-    empty = gw.jvm.java.util.ArrayList()
-    quant = gw.new_array(gw.jvm.double, 0)
-    out = {}
-    it = store.stageList(empty, False, False, quant, empty).iterator()
-    while it.hasNext():
-        sd = it.next()
-        out[(sd.stageId(), sd.attemptId())] = (
-            sd.executorRunTime(),
-            sd.executorCpuTime(),
-            sd.numCompleteTasks(),
-            str(sd.name()),
-        )
-    return out
 
 
 def _job_rows(spark):
@@ -69,19 +53,6 @@ def _job_rows(spark):
     return out
 
 
-def _hygiene(spark):
-    try:
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(False)
-        import gc
-
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-    except Exception as e:
-        print(f"# cleanup warning: {e}", file=sys.stderr)
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
@@ -105,27 +76,7 @@ def main() -> int:
     # python worker pool, so rep timings sit in the bench's warm band
     warm = spark.read.parquet(os.path.join(args.sf_dir, "lineitem.parquet"))
     warm.groupBy("l_returnflag").count().count()
-    cpus = spark.sparkContext.defaultParallelism
-
-    def _worker_warm(it):
-        import importlib
-
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-
-        for m in (
-            "calendar", "charset", "code", "doctext", "eml", "exif",
-            "feeds", "flac", "gifbmp", "jpeg", "latex", "logtext",
-            "markdown", "mp3ogg", "mp4", "multimodal", "notebook",
-            "office", "pdf", "pdfcrypt", "rtf", "similarity",
-            "subtitles", "tabular", "text", "tiff", "web", "wikitext",
-        ):
-            importlib.import_module(f"datasplash_spark.functions.{m}")
-        importlib.import_module("datasplash_spark.objectmode")
-        importlib.import_module("datasplash_spark.sources.archives")
-        yield from it
-
-    spark.range(0, cpus, 1, cpus).mapInPandas(_worker_warm, "id long").count()
+    warm_workers(spark)
 
     qs = Q.queries()
     for name in args.names:

@@ -2,7 +2,7 @@
 """Regenerate the README "Driver-gate rotation status" section from
 the CORRECTNESS_r*.json artifacts + the live registry order, so the
 rotation state (which query is driver-proven in which round, which
-are still gate_sim-only) is self-documenting instead of living in
+are still check_oracle-only) is self-documenting instead of living in
 ROUNDLOG prose.
 
 Usage: python scripts/rotation_status.py        # rewrites README.md
@@ -44,7 +44,7 @@ def build_section() -> str:
                 else "rows-only by design (no driver row yet)"
             )
         elif name not in latest_green:
-            tag = "gate_sim-only (never driver-gated)"
+            tag = "check_oracle-only (never driver-gated)"
         else:
             tag = f"driver-green r{latest_green[name]}"
         buckets.setdefault(tag, []).append(name)

@@ -26,6 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import _cpu_meter, _hygiene, warm_workers
 from datasplash_spark.pipeline import PipelineOptions, make_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -1016,37 +1017,7 @@ def probe(spark, k: int) -> None:
             f"x{k} {name}: {time.time() - t0:.2f}s ({rows} rows{cpu})",
             flush=True,
         )
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(False)
-        import gc
-
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-
-
-def _cpu_meter(spark):
-    """Executor-CPU snapshot fn via the status store (same approach
-    as bench.py's cpu column — cumulative per (stage, attempt), so
-    deltas are monotone); None if the py4j surface is unavailable."""
-    try:
-        gw = spark.sparkContext._gateway
-        store = spark._jsparkSession.sparkContext().statusStore()
-        empty = gw.jvm.java.util.ArrayList()
-        quant = gw.new_array(gw.jvm.double, 0)
-
-        def snapshot() -> dict:
-            out = {}
-            it = store.stageList(empty, False, False, quant, empty).iterator()
-            while it.hasNext():
-                sd = it.next()
-                out[(sd.stageId(), sd.attemptId())] = sd.executorCpuTime()
-            return out
-
-        snapshot()
-        return snapshot
-    except Exception:
-        return None
+        _hygiene(spark)
 
 
 def _objectmode_wordcount(spark, docs):
@@ -1083,6 +1054,7 @@ def main() -> int:
     spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet")).groupBy(
         "l_returnflag"
     ).count().count()
+    warm_workers(spark)
     for k in ks:
         probe(spark, k)
     return 0

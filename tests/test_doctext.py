@@ -724,7 +724,7 @@ def test_modality_gates_survive_divergent_edge_chars(spark, tmp_path):
     )
     if scripts not in sys.path:
         sys.path.insert(0, scripts)
-    from gate_sim import _compare_one, oracle_views
+    from check_oracle import _compare_one, oracle_views
 
     from datasplash_spark import queries as Q
 
@@ -1612,7 +1612,7 @@ def test_modality_gates_divergent_edge_chars_all(spark, tmp_path):
     )
     if scripts not in sys.path:
         sys.path.insert(0, scripts)
-    from gate_sim import _compare_one, oracle_views
+    from check_oracle import _compare_one, oracle_views
 
     from datasplash_spark import queries as Q
 

@@ -3,7 +3,7 @@
 The external driver gates only the FIRST 50 registry entries per
 round, so a regression in an out-of-window query would otherwise go
 unseen for up to two rounds. This test runs the driver-faithful
-comparison (scripts/gate_sim.run_gate — dtype-sensitive canonical
+comparison (scripts/check_oracle.run_gate — dtype-sensitive canonical
 hash, the same pipeline the driver uses) over EVERY oracle-paired
 registry query at sf0.01 inside plain ``pytest tests/``, so any
 oracle mismatch fails CI immediately.
@@ -38,7 +38,7 @@ GATE_SF_DIR = os.environ.get("SPARK_GRAFT_GATE_SF_DIR", "/root/testdata/sf0.01")
 def test_every_oracle_paired_query_matches_duckdb(spark):
     import time
 
-    from gate_sim import oracle_views, run_gate
+    from check_oracle import oracle_views, run_gate
 
     t0 = time.time()
     lines: list[str] = []
