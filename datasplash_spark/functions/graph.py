@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.elementwise import ColumnLike, _col
+from ..pipeline import local_table
 
 
 #: edge-count threshold below which :func:`connected_components` runs
@@ -239,17 +240,11 @@ def _union_find_local(sym: DataFrame) -> DataFrame:
             T.StructField("component", node_type, False),
         ]
     )
-    # Arrow path: at the threshold ceiling (~1M edges → up to 2M
-    # nodes) a row-list createDataFrame pays per-row Python
-    # serialization; a pandas frame ships as Arrow batches instead
-    # (order-of-magnitude faster, same schema contract).
-    import pandas as pd
-
-    nodes = list(parent)
-    pdf = pd.DataFrame(
-        {"node": nodes, "component": [find(n) for n in nodes]}
-    )
-    return spark.createDataFrame(pdf, schema)
+    # Arrow-backed (local_table): at the threshold ceiling (~1M edges
+    # → up to 2M nodes) a row-list createDataFrame pays per-row Python
+    # serialization on workers; an Arrow table is decoded by the JVM,
+    # whether or not the session's Arrow flag is on.
+    return local_table(spark, [(n, find(n)) for n in list(parent)], schema)
 
 
 def cluster_assignments(

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.elementwise import ColumnLike, _col
-from ..pipeline import read_parquet_memo
+from ..pipeline import local_table, read_parquet_memo
 
 
 def _sql_double(x: float) -> str:
@@ -814,8 +814,9 @@ def _cell_pair_plan(
     ``ivf_centroids``). Previously these were two separate aggregate
     jobs over the assignment (VERDICT r6 item 5); now the max-cell
     check and the salt table share the single pass, and the salt
-    side of every block join becomes a local table instead of an
-    aggregate subtree.
+    side of every block join is a ``LocalRelation`` built on the
+    driver (:func:`~datasplash_spark.pipeline.local_table`) instead of
+    an aggregate subtree or a Python-worker ``parallelize`` scan.
 
     ``auto`` → ``arrow`` when the LARGEST cell crosses
     ``arrow_cell_threshold`` rows (the measured regime where the
@@ -882,7 +883,7 @@ def _cell_pair_plan(
             T.StructField("_s", T.IntegerType()),
         ]
     )
-    salt = scored.sparkSession.createDataFrame(widths, schema)
+    salt = local_table(scored.sparkSession, widths, schema)
     # replicated pair-side rows (each row explodes s ways onto its
     # cell's blocks) — the driver already holds the per-cell counts,
     # so the pair-join sizing below is exact, not an estimate
@@ -908,7 +909,10 @@ def _pair_join_parallel(
     session's ``spark.sql.autoBroadcastJoinThreshold`` (exact
     driver-side row count × row width), broadcast it and hash-spread
     the anchor side to core width — the scoring then runs in the
-    P-way probe stage with no shuffle of pair rows at all. Above the
+    P-way probe stage with no shuffle of pair rows at all. The anchor
+    side holds the same rows the driver has just sized under the
+    broadcast threshold, so that exchange is cheap on every call and
+    needs no look at the side's current partitioning. Above the
     threshold (the 100 TB regime) the sort-merge path stands
     unchanged. Returns (l, r, use_broadcast)."""
     if not dim:
@@ -946,14 +950,11 @@ def _pair_join_parallel(
     est_bytes = repl_rows * (8 * int(dim) + 80)
     if thresh <= 0 or est_bytes > thresh:
         return l, r, False
-    sc = l.sparkSession.sparkContext
-    p = sc.defaultParallelism
-    if l.rdd.getNumPartitions() < p:
-        # hash on the second (id) column (columns[0] is 'cell'):
-        # corpus-cardinality key -> even spread (guide §2.5),
-        # deterministic under task retry
-        l = l.repartition(p, l.columns[1])
-    return l, F.broadcast(r), True
+    # hash on the second (id) column (columns[0] is 'cell'):
+    # corpus-cardinality key -> even spread (guide §2.5),
+    # deterministic under task retry
+    p = l.sparkSession.sparkContext.defaultParallelism
+    return l.repartition(p, l.columns[1]), F.broadcast(r), True
 
 
 def _salt_blocks(scored: DataFrame, salt: DataFrame) -> DataFrame:
@@ -1812,7 +1813,8 @@ def ivf_knn_join(
         c0 = corpus.limit(0).select(_col(id_col).alias("vec_id"))
         return q0.crossJoin(c0).withColumn("score", F.lit(0.0))
     spark = corpus.sparkSession
-    cent_df = spark.createDataFrame(
+    cent_df = local_table(
+        spark,
         [
             (i, [float(x) for x in c], _pynorm([float(x) for x in c]))
             for i, c in enumerate(centroids)

@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.elementwise import ColumnLike, _col
-from ..pipeline import read_parquet_memo
+from ..pipeline import local_table, read_parquet_memo
 
 #: tiny per-language stopword lists for the n-gram/stopword language
 #: heuristic. Deliberately small + deterministic (oracle replicates).
@@ -1119,8 +1119,8 @@ def bm25_scores(
     stats = df.agg(F.count(F.lit(1)).alias("n_docs")).crossJoin(
         dl.agg(F.avg("dl").alias("avgdl"))
     )
-    q = df.sparkSession.createDataFrame(
-        [(str(t),) for t in query_terms], "term string"
+    q = local_table(
+        df.sparkSession, [(str(t),) for t in query_terms], "term string"
     ).distinct()
     idf = F.log(
         F.lit(1.0)
@@ -1186,7 +1186,8 @@ def bm25_batch(
     stats = df.agg(F.count(F.lit(1)).alias("n_docs")).crossJoin(
         dl.agg(F.avg("dl").alias("avgdl"))
     )
-    probe = df.sparkSession.createDataFrame(
+    probe = local_table(
+        df.sparkSession,
         sorted({(str(q), str(t)) for q, ts in queries.items() for t in ts}),
         "query_id string, term string",
     )
@@ -1474,8 +1475,8 @@ def filter_counts(
         # untyped empty array fails analysis — return a zero-row
         # frame with the contract schema instead
         spark = df.sparkSession
-        return spark.createDataFrame(
-            [], "filter string, n_failed bigint, n_total bigint"
+        return local_table(
+            spark, [], "filter string, n_failed bigint, n_total bigint"
         )
     aggs = [
         F.sum(
@@ -1574,7 +1575,7 @@ def train_linear_classifier(
         w: dict[int, float] = {}
         for _ in range(int(epochs)):
             wrows = [(b, wt) for b, wt in w.items()] or [(0, 0.0)]
-            wdf = spark.createDataFrame(wrows, "bucket long, w double")
+            wdf = local_table(spark, wrows, "bucket long, w double")
             resid = (
                 feat.join(F.broadcast(wdf), "bucket", "left")
                 .groupBy("doc_id", "y")
@@ -1611,7 +1612,7 @@ def train_linear_classifier(
     # DROP docs whose every token is unseen — dense zeros keep the
     # train-on-sample / apply-corpus-wide contract exact.
     rows = [(b, w.get(b, 0.0)) for b in range(int(n_buckets))]
-    return spark.createDataFrame(rows, "bucket long, weight double")
+    return local_table(spark, rows, "bucket long, weight double")
 
 
 def subword_stats(
@@ -2316,7 +2317,7 @@ def bm25_batch_from_store(
         F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
     )
     dfreq = post.groupBy("term").agg(F.count(F.lit(1)).alias("dfq"))
-    probe = spark.createDataFrame(pairs, "query_id string, term string")
+    probe = local_table(spark, pairs, "query_id string, term string")
     idf = F.log(
         F.lit(1.0)
         + (F.lit(stats["n_docs"]) - F.col("dfq") + 0.5)
@@ -2479,7 +2480,8 @@ def bm25_hard_negatives(
     queries = {q: terms for q, (terms, _pos) in labeled_queries.items()}
     scored = bm25_batch(df, queries, k1=k1, b=b, text=text, id_col=id_col)
     spark = df.sparkSession
-    pos = spark.createDataFrame(
+    pos = local_table(
+        spark,
         [(str(q), p) for q, (_t, p) in sorted(labeled_queries.items())],
         "query_id string, pos_doc_id long",
     )

@@ -63,6 +63,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .pipeline import local_table
+
 _PROTO = 4
 
 _VALUE_SCHEMA = "value binary"
@@ -800,8 +802,8 @@ class PCollection:
         result = partials.groupBy("key").applyInPandas(final, schema=_VALUE_SCHEMA)
         if not without_defaults and fn.initf is not None:
             spark = self._base.sparkSession
-            default = spark.createDataFrame(
-                [(_dumps(fn.extract(fn.init())),)], schema=_VALUE_SCHEMA
+            default = local_table(
+                spark, [(_dumps(fn.extract(fn.init())),)], _VALUE_SCHEMA
             )
             # keep the default row only when the aggregate is empty:
             # anti-join against the (0-or-1-row) result, distributively

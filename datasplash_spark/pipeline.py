@@ -344,6 +344,34 @@ def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
     return df
 
 
+def local_table(spark: SparkSession, rows, schema) -> DataFrame:
+    """A driver-built table (salt widths, query terms, centroids,
+    weights) as a plan leaf that never starts a Python worker.
+
+    ``createDataFrame(list, schema)`` pickles the rows into a
+    ``parallelize`` PythonRDD, so every action that reads the table
+    runs a stage through Python workers. A ``pyarrow.Table`` typed
+    from the Spark schema is decoded by the JVM instead: a
+    ``LocalRelation`` below ``spark.sql.execution.arrow.
+    localRelationThreshold``, Arrow batches above it, whatever the
+    session's ``spark.sql.execution.arrow.pyspark.enabled`` says.
+    ``rows`` is a sequence of tuples in schema order; ``schema`` is a
+    ``StructType`` or a DDL string."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load every driver testdata table present under ``sf_dir``."""
     out: dict[str, DataFrame] = {}

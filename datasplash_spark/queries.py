@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from .functions import chat as ch
 from .functions import dedup as dd
-from .pipeline import load_table, spread_scan
+from .pipeline import load_table, local_table, spread_scan
 from .functions import similarity as sim
 from .functions import text as tx
 from .operators import (
@@ -2089,8 +2089,8 @@ def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     urls = docs.select(
         "doc_id", F.concat(F.lit("https://"), host, path).alias("url")
     )
-    robots = spark.createDataFrame(
-        _ROBOTS_FIXTURES, "host string, robots_txt string"
+    robots = local_table(
+        spark, _ROBOTS_FIXTURES, "host string, robots_txt string"
     )
     return wb.robots_filter(urls, robots, agent="*").select(
         "doc_id", "url", "host", "allowed"

@@ -6711,6 +6711,106 @@ def test_sidecar_io_schedules_no_jobs(spark, tmp_path):
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
+def _near_dup_vectors(spark):
+    """10 directions × 3 jittered copies (ids 3g, 3g+1, 3g+2)."""
+    import random
+
+    rng = random.Random(5)
+    rows = []
+    for _ in range(10):
+        c = [rng.uniform(-1, 1) for _ in range(6)]
+        for _ in range(3):
+            rows.append(
+                (len(rows), [x + rng.uniform(-0.02, 0.02) for x in c])
+            )
+    return generate_input(
+        spark, rows, "vec_id bigint, embedding array<double>"
+    )
+
+
+def test_contrastive_pairs_build_runs_two_jobs(spark):
+    """Building contrastive_pairs runs exactly the centroid job and
+    the cell-count job: the salt table is a local relation and the
+    pair join asks nothing of its anchor side's partitions."""
+    df = _near_dup_vectors(spark)
+    sc = spark.sparkContext
+    group = "contrastive-build-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        sim.contrastive_pairs(df, n_cells=3, seed=7, backend="expr")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+
+
+def test_local_table_matches_create_dataframe(spark):
+    """local_table returns the rows and schema the row-list
+    createDataFrame did, on the shapes the package builds: zero rows,
+    a LongType cell, a nullable column holding None, an array column
+    and the binary object-mode value row."""
+    from pyspark.sql import types as T
+
+    from datasplash_spark.objectmode import _VALUE_SCHEMA, _dumps
+    from datasplash_spark.pipeline import local_table
+
+    cases = [
+        ([], "filter string, n_failed bigint, n_total bigint"),
+        (
+            [(1 << 40, 3), (-7, 1)],
+            T.StructType(
+                [
+                    T.StructField("cell", T.LongType()),
+                    T.StructField("_s", T.IntegerType()),
+                ]
+            ),
+        ),
+        ([("q1", None), ("q2", "t")], "query_id string, term string"),
+        (
+            [(0, [1.0, -2.5], 2.69)],
+            "cell int, cvec array<double>, cnorm double",
+        ),
+        ([(_dumps({"a": (1, None)}),)], _VALUE_SCHEMA),
+    ]
+    for rows, schema in cases:
+        got = local_table(spark, rows, schema)
+        want = spark.createDataFrame(rows, schema)
+        assert got.schema == want.schema, schema
+        assert got.collect() == want.collect(), schema
+
+
+def test_pair_stages_on_local_tables_keep_results(spark):
+    """The pair stages read their salt table through local_table with
+    unchanged results: an empty frame with explicit centroids still
+    yields no rows, and the LongType hyperplane buckets of
+    bucketed_cosine_pairs give the same pair set with and without
+    salting (every jittered triple pairs up except id 8, whose
+    copy lands in another bucket)."""
+    cents = [[1.0, 0.0], [0.0, 1.0]]
+    empty = spark.createDataFrame([], "vec_id bigint, embedding array<double>")
+    assert sim.semantic_dedup(
+        empty, eps=0.5, centroids=cents, pair_backend="expr"
+    ).collect() == []
+    assert sim.contrastive_pairs(
+        empty, centroids=cents, backend="expr"
+    ).collect() == []
+
+    df = _near_dup_vectors(spark)
+    want = {
+        (3 * g + i, 3 * g + j)
+        for g in range(10)
+        for i in range(3)
+        for j in range(i + 1, 3)
+    } - {(6, 8), (7, 8)}
+    for kw in ({}, {"max_cell_rows": 2}):
+        got = {
+            (r.a, r.b)
+            for r in sim.bucketed_cosine_pairs(
+                df, eps=0.95, bits=3, backend="expr", **kw
+            ).collect()
+        }
+        assert got == want, kw
+
+
 def test_pair_width_gate_drops_malformed_rows(spark):
     """ADVICE r13: a vector WIDER than the centroid dimension must
     DROP out of the pair stage (the fold's null-pad behavior), not

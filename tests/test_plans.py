@@ -1398,3 +1398,110 @@ def test_make_session_caps_codegen_method_size(spark):
     codegen's fallback with HotSpot's 8000-byte JIT limit; Spark's own
     default (65535) would leave oversized fused stages interpreted."""
     assert spark.conf.get("spark.sql.codegen.hugeMethodLimit") == "8000"
+
+
+def _driver_table_frames(spark, tmp_path):
+    """The public frames whose plans carry a driver-built table: the
+    salt widths of contrastive_pairs, the query terms and probes of
+    the three BM25 entry points, the IVF centroids of ivf_knn_join
+    and the weights train_linear_classifier returns. Inputs are
+    parquet scans, so any ``LogicalRDD`` in a plan is a driver table
+    shipped through Python workers."""
+    from pyspark.sql import functions as F
+
+    from datasplash_spark.functions import similarity as sim
+    from datasplash_spark.functions import text as tx
+    from datasplash_spark.pipeline import load_table
+
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    emb = load_table(spark, SF_DIR, "embeddings").select(
+        "vec_id", "embedding"
+    )
+    store = str(tmp_path / "postings")
+    if not os.path.exists(store):
+        tx.materialize_postings(docs, store, n_buckets=8)
+    queries = {"q1": ["the", "data"], "q2": ["of"]}
+    labeled = docs.limit(60).withColumn(
+        "label", (F.col("doc_id") % 2).cast("int")
+    )
+    return {
+        "contrastive_pairs": sim.contrastive_pairs(
+            emb, n_cells=4, seed=7, backend="expr"
+        ),
+        "bm25_scores": tx.bm25_scores(docs, ["the", "data"]),
+        "bm25_batch": tx.bm25_batch(docs, queries, top_k=3),
+        "bm25_batch_from_store": tx.bm25_batch_from_store(
+            spark, store, queries, top_k=3
+        ),
+        "ivf_knn_join": sim.ivf_knn_join(
+            emb,
+            emb.limit(4).withColumnRenamed("vec_id", "query_id"),
+            k=2,
+            n_cells=4,
+            nprobe=2,
+        ),
+        "train_linear_classifier": tx.train_linear_classifier(
+            labeled, n_buckets=16, epochs=1
+        ),
+    }
+
+
+def test_driver_tables_are_local_relations(spark, tmp_path):
+    """Every driver-built table enters the plan as a ``LocalRelation``
+    (``pipeline.local_table``), never as a ``LogicalRDD`` whose every
+    read runs a stage through Python workers — also with the
+    session's Arrow flag off, which a pandas-input createDataFrame
+    would need."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    try:
+        for flag in ("true", "false"):
+            spark.conf.set(key, flag)
+            for name, df in _driver_table_frames(spark, tmp_path).items():
+                plan = df._jdf.queryExecution().optimizedPlan().toString()
+                assert "LocalRelation" in plan, (flag, name, plan)
+                assert "LogicalRDD" not in plan, (flag, name, plan)
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_driver_tables_go_through_local_table():
+    """No module of the package calls ``createDataFrame`` except
+    ``pipeline.local_table`` and the two entry points that take user
+    data as given."""
+    import ast
+    import pathlib
+
+    import datasplash_spark
+
+    allowed = {
+        # generate_input: user rows of any Python type, schema inferred
+        ("sources/files.py", "generate_input"),
+        # PCollection.from_items: pickled user values, often repartitioned
+        ("objectmode.py", "from_items"),
+        ("pipeline.py", "local_table"),
+    }
+
+    def callers(node, owner):
+        # yields the innermost enclosing function of each call
+        for child in ast.iter_child_nodes(node):
+            name = (
+                child.name
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+                else owner
+            )
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "createDataFrame"
+            ):
+                yield name
+            yield from callers(child, name)
+
+    root = pathlib.Path(datasplash_spark.__file__).parent
+    found = {
+        (path.relative_to(root).as_posix(), name)
+        for path in sorted(root.rglob("*.py"))
+        for name in callers(ast.parse(path.read_text("utf-8")), "<module>")
+    }
+    assert found <= allowed, sorted(found - allowed)
