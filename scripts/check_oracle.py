@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -51,12 +52,18 @@ def _hash(df: pd.DataFrame) -> int:
 
 def oracle_views(sf_dir: str):
     """A DuckDB connection with the testdata tables registered as
-    views — the driver's oracle side."""
-    con = duckdb.connect()
+    views: the oracle side of the compare. A table may be one parquet file
+    or a Spark-written directory of part files (a replicated scale
+    dir). DuckDB spills to the system temp dir, not to ``./.tmp``
+    under whatever directory the check runs from."""
+    con = duckdb.connect(config={"temp_directory": tempfile.gettempdir()})
     for t in TESTDATA_TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+        if os.path.isdir(path):
+            path = os.path.join(path, "*.parquet")
+        elif not os.path.exists(path):
+            continue
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     return con
 
 
