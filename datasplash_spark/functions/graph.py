@@ -7,22 +7,30 @@ generation in any real corpus-dedup pipeline).
 Design for 100 TB:
 
 - Size-adaptive strategy (the same logic AQE applies to broadcast
-  joins): edge lists at or below :data:`DRIVER_CC_MAX_EDGES` take an
-  exact driver-side union-find — one bounded collect, zero iterative
-  rounds (whose cost at that size is pure job latency). Larger graphs
-  take the distributed paths below; nothing unbounded ever reaches
-  the driver.
+  joins): ONE bounded action, a collect of at most
+  :data:`DRIVER_CC_MAX_EDGES` + 1 symmetrized edges, both sizes the
+  graph and fetches it. At or below the threshold an exact driver-side
+  union-find labels the rows — one SQL execution, nothing persisted,
+  zero iterative rounds (whose cost at that size is pure job latency).
+  One row over the threshold hands the graph to the distributed paths
+  below; nothing unbounded ever reaches the driver. The collected
+  frame is the symmetrized ``distinct`` edge list, not the raw
+  ``(src, dst)`` rows: the limit then bounds exactly the edge set
+  both paths label, so duplicate, reversed and self-loop candidate
+  pairs neither ship to the driver nor count against its budget, and
+  a graph takes the same path however often its pairs repeat.
 - Hash-min label propagation: each node repeatedly adopts the minimum
   label among itself and its neighbors. Converges in O(diameter)
   rounds; LSH duplicate clusters are near-cliques (diameter 1-2), so
   3-4 rounds in practice. Each round is one shuffle join (labels ⋈
   edges on the neighbor key) + one partial-aggregated min.
-- The symmetrized edge list is persisted once and reused every round;
-  per-round results are ``localCheckpoint``-ed to truncate lineage
-  (the classic iterative-DataFrame trap: without it the plan doubles
-  per round and Catalyst analysis time explodes). On a real cluster
-  with reliable storage, swap in ``checkpoint()`` against a
-  checkpoint dir for fault tolerance — same shape.
+- On the loop path the symmetrized edge list is persisted once and
+  reused every round; per-round results are ``localCheckpoint``-ed
+  to truncate lineage (the classic iterative-DataFrame trap: without
+  it the plan doubles per round and Catalyst analysis time
+  explodes). On a real cluster with reliable storage, swap in
+  ``checkpoint()`` against a checkpoint dir for fault tolerance —
+  same shape.
 - Convergence is detected by counting label decreases (labels are
   monotonically non-increasing), one cheap action per round over the
   already-checkpointed frame.
@@ -73,11 +81,16 @@ def connected_components(
     ids must be orderable, e.g. numeric or string doc ids).
 
     ``driver_threshold`` (default :data:`DRIVER_CC_MAX_EDGES`): edge
-    lists at or below this size short-circuit to an exact driver-side
-    union-find — one bounded collect instead of O(diameter) shuffle
-    rounds whose cost on small graphs is all job latency. Pass ``0``
-    to force the distributed loop (tests do, to pin its semantics);
-    both paths produce identical labelings.
+    lists at or below this many symmetrized distinct edges
+    short-circuit to an exact driver-side union-find. One
+    ``limit(driver_threshold + 1).collect()`` both sizes and fetches
+    the list — one SQL execution and no persist, instead of
+    O(diameter) shuffle rounds whose cost on small graphs is all job
+    latency. When more rows come back, the edge list is persisted and
+    the distributed loop runs over it (its upstream computes once
+    more for that). Pass ``0`` to force the distributed loop (tests
+    do, to pin its semantics); both paths produce identical
+    labelings.
 
     ``n_partitions`` sizes the per-round shuffle. ``None`` (default)
     lets AQE size it: the ``groupBy`` keeps map-side partial
@@ -114,18 +127,23 @@ def connected_components(
         .select("e.a", "e.b")
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
-    # size-adaptive strategy: count the (just-persisted) edge list —
-    # the loop's first action would materialize it anyway — and take
-    # the exact driver-side path when it is broadcast-small.
+    # size-adaptive strategy in ONE bounded action: collect at most
+    # limit + 1 symmetrized edges. At or below the limit the rows ARE
+    # the graph and union-find labels them on the driver; one row
+    # over means the graph is too big for the driver, so the loop
+    # takes over (its upstream then computes once more: one extra
+    # pass next to the loop's O(diameter) rounds).
     limit = DRIVER_CC_MAX_EDGES if driver_threshold is None else driver_threshold
-    if limit > 0 and sym.count() <= limit:
-        try:
-            return _union_find_local(sym)
-        finally:
-            sym.unpersist()
+    if limit > 0:
+        rows = sym.limit(limit + 1).collect()
+        if len(rows) <= limit:
+            return _union_find_local(
+                sym.sparkSession, rows, sym.schema["a"].dataType
+            )
+
+    sym = sym.persist(StorageLevel.MEMORY_AND_DISK)
 
     def _sized(frame: DataFrame) -> DataFrame:
         if n_partitions is not None:
@@ -205,12 +223,14 @@ def connected_components(
         sym.unpersist()
 
 
-def _union_find_local(sym: DataFrame) -> DataFrame:
-    """Exact union-find over a driver-collected symmetrized edge list
-    (bounded by the caller via :data:`DRIVER_CC_MAX_EDGES`), labeling
-    each node with its component's MINIMUM id — byte-identical output
-    contract to the distributed loop. Path-halving find + min-root
-    union keeps it near-linear."""
+def _union_find_local(spark, rows, node_type) -> DataFrame:
+    """Exact union-find over driver-collected symmetrized ``(a, b)``
+    edge rows (bounded by the caller via :data:`DRIVER_CC_MAX_EDGES`),
+    labeling each node with its component's MINIMUM id —
+    byte-identical output contract to the distributed loop.
+    Path-halving find + min-root union keeps it near-linear."""
+    from pyspark.sql import types as T
+
     parent: dict = {}
 
     def find(x):
@@ -221,18 +241,11 @@ def _union_find_local(sym: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    # one collect job — the row count is already bounded by the
-    # caller's threshold check (toLocalIterator would instead run one
-    # sequential mini-job per partition, pure latency at this size)
-    for a, b in sym.select("a", "b").collect():
+    for a, b in rows:
         ra, rb = find(a), find(b)
         if ra != rb:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-
-    spark = sym.sparkSession
-    node_type = sym.schema["a"].dataType
-    from pyspark.sql import types as T
 
     schema = T.StructType(
         [

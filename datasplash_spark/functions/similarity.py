@@ -18,6 +18,8 @@ expression form avoids Arrow transfer entirely.)
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -244,15 +246,41 @@ def ivf_centroids(
     return [[float(x) for x in r.v] for r in rows]
 
 
+def _centroid_table(centroids: list[list[float]]) -> Column:
+    """The ``array<struct<cid, cvec, cnorm>>`` table that
+    :func:`ivf_assign` folds over, as ONE string literal parsed by
+    ``from_json``, which the optimizer folds to one array Literal.
+    The per-element ``F.lit`` form paid a py4j round-trip per float
+    (~1.7 s of driver time per query at 16×64 — see :func:`lit_vec`),
+    and an ``array(named_struct(...))`` SQL string still left 16×64
+    literal nodes to parse and analyse on every build.
+
+    ``json.dumps`` writes each double's shortest round-trip repr
+    (NaN/±Infinity as bare tokens, which Spark's JSON reader accepts),
+    so every component and norm arrives bit-exact; ``FAILFAST`` makes
+    a table the reader cannot type raise instead of PERMISSIVE's
+    silent NULL cells."""
+    table = [
+        {"cid": i, "cvec": [float(x) for x in c], "cnorm": _pynorm(c)}
+        for i, c in enumerate(centroids)
+    ]
+    return F.from_json(
+        F.lit(json.dumps(table)),
+        "array<struct<cid:int,cvec:array<double>,cnorm:double>>",
+        {"mode": "FAILFAST"},
+    )
+
+
 def ivf_assign(
     vec: ColumnLike,
     centroids: list[list[float]],
     norm_col: Column | None = None,
 ) -> Column:
     """Nearest-centroid assignment (max cosine, ties → lowest cell
-    id) as one ``F.aggregate`` fold over a literal centroid array:
-    a single sequential expression per row — no shuffle, no N×K row
-    blowup, no re-inlined subtrees (the MinHash anti-lesson). Returns
+    id) as one ``F.aggregate`` fold over a literal centroid array
+    (:func:`_centroid_table`): a single sequential expression per row
+    — no shuffle, no N×K row blowup, no re-inlined subtrees (the
+    MinHash anti-lesson). Returns
     a ``struct(cid int, score double)`` so callers needing BOTH the
     cell and its 9-dp-rounded cosine (e.g. SemDeDup's survivor rule)
     pay for one fold, not a fold plus a centroid re-join. Scores
@@ -268,23 +296,7 @@ def ivf_assign(
     v = _col(vec)
     nv = norm(v) if norm_col is None else norm_col
 
-    # one parsed SQL expression for the whole centroid table: the
-    # per-element F.lit form paid a py4j round-trip per float
-    # (~1.7 s of driver time per query at 16×64 — see lit_vec)
-    arr = F.expr(
-        "array("
-        + ",".join(
-            "named_struct('cid',CAST(%d AS INT),'cvec',array(%s),"
-            "'cnorm',%s)"
-            % (
-                i,
-                ",".join(_sql_double(x) for x in c),
-                _sql_double(_pynorm(c)),
-            )
-            for i, c in enumerate(centroids)
-        )
-        + ")"
-    )
+    arr = _centroid_table(centroids)
     init = F.struct(
         F.lit(-1).alias("cid"), F.lit(float("-inf")).alias("score")
     )
@@ -533,7 +545,6 @@ def materialize_ivf(
     probe stream shrinks ~4× and :func:`ivf_topk_from_store`
     auto-detects the layout, scoring with exact integer-dot
     arithmetic (the scale cancels in cosine)."""
-    import json
     import os
 
     if centroids is None:
@@ -582,7 +593,6 @@ def ivf_topk_from_store(
     probe server loads the model-sized quantizer ONCE at startup
     (``materialize_ivf``'s return value, or one sidecar read) instead
     of paying a one-file Spark job per query."""
-    import json
     import os
 
     if centroids is None:
@@ -665,8 +675,6 @@ def _read_sidecar_text(spark, dir_path: str):
     pass the name filter, decode to garbage without raising, and
     crash the caller's ``json.loads`` instead of falling back to the
     codec-aware ``spark.read.text`` (ADVICE r13)."""
-    import json
-
     try:
         jvm = spark._jvm
         jpath = jvm.org.apache.hadoop.fs.Path(dir_path)
@@ -1210,7 +1218,10 @@ def semantic_dedup(
        |cell| ~ corpus/K stays join-friendly (the paper uses K ~ 10^5);
        uneven cells are AQE skew-split on the join key.
     3. connected components over the thresholded pairs only (tiny vs
-       corpus; driver union-find below 1M edges, join-loop above).
+       corpus): one bounded collect of at most 1M + 1 symmetrized
+       edges feeds a driver union-find — one SQL execution, nothing
+       persisted — and a larger edge list takes the join loop
+       (:func:`~.graph.connected_components`).
     4. one survivor per duplicate group: the vector with the LOWEST
        cosine to its cell centroid (the paper's keep-the-outlier rule
        — maximizes retained diversity), ties to the lowest id. Rank-1
@@ -2459,7 +2470,6 @@ def append_ivf(
     ids land. Cost: one columnar id scan of the store per append;
     ``skip_existing_ids=False`` opts out for bulk loads where the
     caller guarantees novelty."""
-    import json
     import os
 
     spark = df.sparkSession

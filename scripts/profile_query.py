@@ -34,7 +34,19 @@ def _job_rows(spark):
     """Per-JOB rows from the AppStatusStore (guide §1.2/§5: on
     multi-action pipelines the bench wall is often JOB-COUNT latency,
     not stage work — list every scheduled job with its wall span so
-    fusible/removable actions are visible)."""
+    fusible/removable actions are visible). A job run for a SQL
+    execution is named by that execution's id and description (the
+    call site of the action that started it): AQE submits its query
+    stages from a pool thread, so their own job names all read
+    ``$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java``."""
+    sql = {}
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    it = execs.iterator()
+    while it.hasNext():
+        ex = it.next()
+        jobs = ex.jobs().keysIterator()
+        while jobs.hasNext():
+            sql[jobs.next()] = f"[sql {ex.executionId()}] {ex.description()}"
     store = spark._jsparkSession.sparkContext().statusStore()
     out = {}
     it = store.jobsList(None).iterator()
@@ -47,7 +59,7 @@ def _job_rows(spark):
         out[jd.jobId()] = (
             t0,
             t1,
-            str(jd.name() or "")[:100],
+            sql.get(jd.jobId(), str(jd.name() or ""))[:100],
             jd.numTasks(),
         )
     return out

@@ -110,6 +110,123 @@ def test_ivf_topk_finds_query_and_bounds_probe(spark):
     assert len(probed_cells) <= 3 and cell_of[7] in probed_cells
 
 
+def _named_struct_centroid_table(centroids):
+    """The centroid table as the array(named_struct(...)) SQL tree
+    that preceded the from_json literal: the differential reference."""
+    return F.expr(
+        "array("
+        + ",".join(
+            "named_struct('cid',CAST(%d AS INT),'cvec',array(%s),'cnorm',%s)"
+            % (
+                i,
+                ",".join(sim._sql_double(x) for x in c),
+                sim._sql_double(sim._pynorm(c)),
+            )
+            for i, c in enumerate(centroids)
+        )
+        + ")"
+    )
+
+
+def _same_double(x, y) -> bool:
+    import math
+    import struct
+
+    if x is None or y is None:
+        return x is y
+    if math.isnan(x) or math.isnan(y):
+        return math.isnan(x) and math.isnan(y)
+    return struct.pack("<d", x) == struct.pack("<d", y)
+
+
+@pytest.mark.parametrize("special", [False, True])
+def test_centroid_table_matches_named_struct_tree(spark, monkeypatch, special):
+    """ivf_assign's from_json centroid table holds the bit-identical
+    doubles of the named_struct tree it replaced (zero, -0.0, 1e308,
+    5e-324 and, in the special case, NaN and ±inf components), so each
+    vector gets the same cid and a bit-identical score; the optimized
+    plan folds the table to ONE Literal, and no finite vector gets a
+    NULL cell (PERMISSIVE from_json would null a table it cannot
+    type)."""
+    import json
+
+    nan, inf = float("nan"), float("inf")
+    cents = [
+        [0.0, 0.0, 0.0, 0.0],
+        [-0.0, 1.0, 2.0, 3.0],
+        [5e-324, 0.0, 0.0, 1.0],
+        [1.0, 2.0, 3.0, 4.0],
+        [1.0, 2.0, 3.0, 4.0],  # tie with cid 3: the lower cid wins
+        [0.1, -1 / 3, 2.5e-7, 7.0],
+    ]
+    if special:
+        # overflowing norms and non-finite components score NaN
+        cents += [[1e308, 1e308, 0.0, -1e308], [nan, 1.0, 1.0, 1.0],
+                  [inf, 0.0, 0.0, 0.0], [-inf, 1.0, 0.0, 0.0]]
+    vecs = [
+        (0, [0.0, 0.0, 0.0, 0.0]),
+        (1, [-0.0, 1.0, 2.0, 3.0]),
+        (2, [2.0, 4.0, 6.0, 8.0]),
+        (3, [1e308, 0.0, 0.0, 0.0]),
+        (4, [5e-324, 0.0, 0.0, 5e-324]),
+        (5, [0.1, -0.3, 0.0, 7.0]),
+        (6, [-1.0, -2.0, -3.0, -4.0]),
+    ]
+    df = generate_input(spark, vecs, "vec_id bigint, embedding array<double>")
+
+    def table_cells(build):
+        (row,) = spark.range(1).select(build(cents).alias("t")).collect()
+        return [(c.cid, c.cvec, c.cnorm) for c in row.t]
+
+    new_cells = table_cells(sim._centroid_table)
+    old_cells = table_cells(_named_struct_centroid_table)
+    assert len(new_cells) == len(cents)
+    for (ci, cv, cn), (oi, ov, on) in zip(new_cells, old_cells):
+        assert ci == oi and len(cv) == len(ov)
+        assert all(_same_double(x, y) for x, y in zip(cv, ov))
+        assert _same_double(cn, on)
+
+    def assign():
+        out = df.select("vec_id", sim.ivf_assign("embedding", cents).alias("a"))
+        return out, {r.vec_id: (r.a.cid, r.a.score) for r in out.collect()}
+
+    out, got = assign()
+    tree = json.loads(out._jdf.queryExecution().optimizedPlan().toJSON())
+    exprs = [
+        e
+        for node in tree
+        for field in node.values()
+        if isinstance(field, list)
+        for sub in field
+        if isinstance(sub, list)
+        for e in sub
+        if isinstance(e, dict) and "class" in e
+    ]
+    names = [e["class"].rsplit(".", 1)[1] for e in exprs]
+    tables = [
+        i
+        for i, e in enumerate(exprs)
+        if names[i] == "Literal"
+        and isinstance(e["dataType"], dict)
+        and e["dataType"].get("type") == "array"
+        and [f["name"] for f in e["dataType"]["elementType"]["fields"]]
+        == ["cid", "cvec", "cnorm"]
+    ]
+    # one folded table, the first child (the argument) of a fold
+    assert len(tables) == 1 and names[tables[0] - 1] == "ArrayAggregate"
+    assert "JsonToStructs" not in names
+    assert all(cid is not None and cid >= 0 for cid, _ in got.values())
+    if not special:
+        assert got[2] == (3, 1.0)  # the exact tie between cids 3 and 4
+
+    monkeypatch.setattr(sim, "_centroid_table", _named_struct_centroid_table)
+    _, ref = assign()
+    assert got.keys() == ref.keys()
+    for k in got:
+        assert got[k][0] == ref[k][0], k
+        assert _same_double(got[k][1], ref[k][1]), k
+
+
 def test_multimodal_features_and_stub(spark):
     docs = generate_input(
         spark, [(1, "abc"), (2, ""), (3, "héllo")], "doc_id bigint, text string"
@@ -249,6 +366,67 @@ def test_connected_components_random_vs_union_find(spark):
                 for r in connected_components(df, driver_threshold=thr).collect()
             }
             assert got == expected, f"trial {trial} driver_threshold={thr}"
+
+
+def _sql_executions(spark) -> int:
+    return spark._jsparkSession.sharedState().statusStore().executionsCount()
+
+
+def _persisted_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_connected_components_driver_path_is_one_execution(spark):
+    """A driver-sized edge list is sized and fetched by ONE bounded
+    collect: one SQL execution while building, nothing left persisted
+    (a count of the persisted edge list followed by a collect of it
+    ran two)."""
+    from datasplash_spark.functions.graph import connected_components
+
+    edges = generate_input(
+        spark, [(1, 2), (2, 3), (10, 11)], "src bigint, dst bigint"
+    )
+    rdds, n0 = _persisted_rdds(spark), _sql_executions(spark)
+    comps = connected_components(edges)
+    assert _sql_executions(spark) - n0 == 1
+    assert _persisted_rdds(spark) == rdds
+    got = {r.node: r.component for r in comps.collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+
+
+@pytest.mark.parametrize("kind", ["bigint", "string"])
+def test_connected_components_threshold_boundary(spark, kind):
+    """At driver_threshold == the symmetrized distinct edge count the
+    driver union-find runs (one execution); one below it the join
+    loop runs. Both label like the forced loop, over duplicate edges,
+    reversed duplicates, self-loops and (for strings) ids whose
+    lexical order differs from their numeric one."""
+    from datasplash_spark.functions.graph import connected_components
+
+    raw = [
+        (1, 2), (1, 2), (2, 1), (2, 3), (3, 3), (9, 10),
+        (10, 9), (10, 11), (40, 40), (5, 40), (12, 5),
+    ]
+    cast = str if kind == "string" else int
+    rows = [(cast(a), cast(b)) for a, b in raw]
+    edges = generate_input(spark, rows, f"src {kind}, dst {kind}")
+    n_sym = len({(a, b) for a, b in rows if a != b} | {
+        (b, a) for a, b in rows if a != b
+    })
+    assert n_sym == 12
+
+    def labels(thr):
+        n0 = _sql_executions(spark)
+        comps = connected_components(edges, driver_threshold=thr)
+        built = _sql_executions(spark) - n0
+        return {r.node: r.component for r in comps.collect()}, built
+
+    loop, _ = labels(0)
+    at, at_execs = labels(n_sym)
+    over, over_execs = labels(n_sym - 1)
+    assert at_execs == 1 and over_execs > 1
+    assert at == loop and over == loop
+    assert loop[cast(12)] == loop[cast(40)] == min(cast(5), cast(12), cast(40))
 
 
 def test_kmeans_refine_recovers_blob_means(spark):

@@ -91,3 +91,29 @@ def test_kept_probe_ops_have_no_registry_row():
     assert not kept & set(Q.queries())
     # an unknown op is rejected before a session starts
     assert SP.main(["2", "dedup_exact"]) == 2
+
+
+def test_profile_query_names_jobs_by_sql_execution(spark):
+    """``profile_query --jobs`` names every job a SQL execution ran by
+    that execution's id and description, AQE's pool-thread stage jobs
+    included (their own job names all read
+    ``$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java``)."""
+    import profile_query
+
+    def side(m):
+        return spark.range(200).groupBy((F.col("id") % m).alias("k")).count()
+
+    before = profile_query._job_rows(spark)
+    # DataFrame.count sets no Python call site, so AQE's stage jobs
+    # take the pool thread's
+    side(7).join(side(5), "k").count()
+    new = {
+        jid: row
+        for jid, row in profile_query._job_rows(spark).items()
+        if jid not in before
+    }
+    assert len(new) >= 2
+    names = {row[2] for row in new.values()}
+    assert len(names) == 1, names
+    (name,) = names
+    assert name.startswith("[sql ") and "count at" in name, name
