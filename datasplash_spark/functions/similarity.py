@@ -19,6 +19,7 @@ expression form avoids Arrow transfer entirely.)
 from __future__ import annotations
 
 import json
+import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -662,6 +663,12 @@ def _write_sidecar_text(spark, dir_path: str, line: str) -> None:
         raise IOError(f"could not move sidecar {staging} to {final}")
 
 
+#: Bytes fetched per py4j call by :func:`_read_sidecar_text`. py4j
+#: returns a ``byte[]`` base64-encoded, so a 5,400-byte chunk is a
+#: 7,202-character response (7,200 plus a 2-character type tag).
+_SIDECAR_CHUNK_BYTES = 5400
+
+
 def _read_sidecar_text(spark, dir_path: str):
     """First line of a one-row text sidecar (_ivf_centroids /
     _postings_stats) read DRIVER-SIDE through the Hadoop FileSystem
@@ -674,26 +681,41 @@ def _read_sidecar_text(spark, dir_path: str):
     COMPRESSED single part file (``part-*.txt.gz``) would otherwise
     pass the name filter, decode to garbage without raising, and
     crash the caller's ``json.loads`` instead of falling back to the
-    codec-aware ``spark.read.text`` (ADVICE r13)."""
+    codec-aware ``spark.read.text`` (ADVICE r13).
+
+    The part file comes over in ``byte[]`` chunks of
+    ``_SIDECAR_CHUNK_BYTES``, joined and UTF-8-decoded in Python. A
+    py4j response longer than about 8,190 characters costs a fixed
+    ~44 ms (measured: 8,180 characters 0.3 ms, 8,200 characters
+    44 ms), which a single ``IOUtils.toString`` of the 22 KB centroid
+    JSON paid on every read; byte chunks also never split a
+    multi-byte character before the decode."""
     try:
         jvm = spark._jvm
         jpath = jvm.org.apache.hadoop.fs.Path(dir_path)
         fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
         parts = [
-            st.getPath()
+            st
             for st in fs.listStatus(jpath)
             if st.getPath().getName().startswith("part-")
             and st.getLen() > 0
         ]
         if len(parts) == 1:
-            stream = fs.open(parts[0])
+            size = int(parts[0].getLen())
+            io = jvm.org.apache.commons.io.IOUtils
+            stream = fs.open(parts[0].getPath())
             try:
-                text = jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
+                data = b"".join(
+                    bytes(io.toByteArray(
+                        stream, min(_SIDECAR_CHUNK_BYTES, size - off)
+                    ))
+                    for off in range(0, size, _SIDECAR_CHUNK_BYTES)
                 )
             finally:
                 stream.close()
-            line = text.splitlines()[0] if text else ""
+            # the first line by Hadoop's rule (ends at \n, \r or
+            # \r\n), which is what spark.read.text splits on
+            line = re.match(r"[^\r\n]*", data.decode("utf-8")).group()
             if line:
                 json.loads(line)  # compressed/garbled -> fallback
                 return line
@@ -2467,7 +2489,10 @@ def append_ivf(
     a replayed append after a crash between sink-commit and
     checkpoint-commit writes NOTHING (store byte-identical), and a
     PARTIALLY committed append heals on replay — only the missing
-    ids land. Cost: one columnar id scan of the store per append;
+    ids land. Cost: one columnar id scan of the store per append,
+    inside the write's own job — there is no separate emptiness
+    check, because a ``cell``-partitioned write of an empty frame
+    writes no data file (the commit only rewrites ``_SUCCESS``);
     ``skip_existing_ids=False`` opts out for bulk loads where the
     caller guarantees novelty."""
     import os
@@ -2476,13 +2501,11 @@ def append_ivf(
     centroids = json.loads(
         _read_sidecar_text(spark, os.path.join(path, "_ivf_centroids"))
     )
-    # one listing + schema inference serves both the id ledger and the
-    # layout check below
-    store = spark.read.parquet(path)
+    # one resolved relation serves both the id ledger and the layout
+    # check below; the memo's key changes with every commit to path
+    store = read_parquet_memo(spark, path)
     if skip_existing_ids:
         df = _anti_join_store_ids(df, store, id_col)
-        if df.isEmpty():
-            return
     assigned = (
         df.withColumn("_nv", norm(_col(vec_col)))
         .withColumn("cell", ivf_cell(vec_col, centroids, norm_col=F.col("_nv")))

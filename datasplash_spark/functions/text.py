@@ -1719,41 +1719,74 @@ def materialize_postings(
 
     Reference anchor: no analog; retrieval-store extension surface
     (BASELINE.json north_star)."""
-    import json
-    import os
-
-    from .dedup import md5_int31
-
     if n_buckets < 1:
         raise ValueError("n_buckets must be positive")
+    stats = _postings_stats_dict(
+        *_write_postings(
+            df, text, id_col, n_buckets,
+            lambda p: p.write.mode("overwrite")
+            .partitionBy("term_bucket")
+            .parquet(path),
+        ),
+        int(n_buckets),
+    )
+    _write_postings_stats(df.sparkSession, path, stats)
+    return stats
+
+
+def _tf_dl(df, text: ColumnLike, id_col: ColumnLike):
+    """``(tf, dl)`` of ``df``'s whitespace tokens: per-(doc, term)
+    counts ``(doc_id, term, tf)`` and per-doc token counts
+    ``(doc_id, dl)``. Empty tokens are dropped, so a doc with no
+    token has no row in either."""
     toks = df.select(
         _col(id_col).alias("doc_id"), F.explode(tokens(text)).alias("term")
     ).filter(F.col("term") != "")
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    postings = tf.join(dl, "doc_id").withColumn(
-        "term_bucket",
-        (md5_int31(F.col("term")) % F.lit(n_buckets)).cast("int"),
+    return tf, dl
+
+
+def _write_postings(
+    df, text, id_col, n_buckets: int, write
+) -> tuple[int, int, int]:
+    """Hand ``df``'s postings ``(doc_id, term, tf, dl, term_bucket)``
+    to ``write``, which runs the write action, and return
+    ``(n_docs, sum_dl, n_dl)`` as Observations on that write saw them:
+    ``n_docs`` on the input frame, so docs with no token count, and
+    ``n_dl``/``sum_dl`` over the per-doc lengths. No job runs after
+    the write, except when the input has no token row: the join then
+    meets an empty side, AQE replaces it by an empty relation, and the
+    observed nodes leave the final plan. Spark completes such an
+    observation with an empty row, which ``Observation.get`` cannot
+    convert (measured on Spark 4.1), so those counts come from one
+    aggregate instead."""
+    from pyspark.sql import Observation
+
+    from .dedup import md5_int31
+
+    def lengths():
+        return F.count(F.lit(1)).alias("n_dl"), F.sum("dl").alias("sum_dl")
+
+    def observed_or(obs, fallback) -> dict:
+        return obs.get if obs._jo.getRow().size() else fallback()
+
+    docs, lens = Observation(), Observation()
+    tf, dl = _tf_dl(
+        df.observe(docs, F.count(F.lit(1)).alias("n_docs")), text, id_col
     )
-    postings.write.mode("overwrite").partitionBy("term_bucket").parquet(path)
-    row = (
-        df.agg(F.count(F.lit(1)).alias("n_docs"))
-        .crossJoin(
-            dl.agg(
-                F.sum("dl").alias("sum_dl"),
-                F.count(F.lit(1)).alias("n_dl"),
-            )
+    write(
+        tf.join(dl.observe(lens, *lengths()), "doc_id").withColumn(
+            "term_bucket",
+            (md5_int31(F.col("term")) % F.lit(n_buckets)).cast("int"),
         )
-        .collect()[0]
     )
-    stats = _postings_stats_dict(
-        int(row.n_docs),
-        int(row.sum_dl or 0),
-        int(row.n_dl),
-        int(n_buckets),
+    n_docs = observed_or(docs, lambda: {"n_docs": df.count()})["n_docs"]
+    got = observed_or(
+        lens,
+        lambda: _tf_dl(df, text, id_col)[1].agg(*lengths()).first().asDict(),
     )
-    _write_postings_stats(df.sparkSession, path, stats)
-    return stats
+    return int(n_docs), int(got["sum_dl"] or 0), int(got["n_dl"])
 
 
 def _postings_stats_dict(
@@ -1783,6 +1816,44 @@ def _write_postings_stats(spark, path: str, stats: dict) -> None:
     _write_sidecar_text(
         spark, os.path.join(path, "_postings_stats"), json.dumps(stats)
     )
+
+
+def _batch_lengths(store) -> dict:
+    """Per-batch entries ``{"<_batch_id>": [n, s]}`` of a stream-layout
+    postings store frame, from one aggregate: ``n`` docs with postings
+    in that batch and ``s`` their summed lengths."""
+    rows = (
+        store.select("_batch_id", "doc_id", "dl")
+        .distinct()
+        .groupBy("_batch_id")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
+        .collect()
+    )
+    return {str(r["_batch_id"]): [int(r["n"]), int(r["s"] or 0)] for r in rows}
+
+
+def _write_batch_stats(spark, path: str, batches: dict, n_buckets: int) -> dict:
+    """Write a stream-layout store's per-batch entries to
+    ``_postings_batches``, then ``_postings_stats`` from their sums,
+    and return the stats dict. Only the store's writers read
+    ``_postings_batches``; probes read the constant-size
+    ``_postings_stats``."""
+    import json
+    import os
+
+    from .similarity import _write_sidecar_text
+
+    _write_sidecar_text(
+        spark,
+        os.path.join(path, "_postings_batches"),
+        json.dumps(batches, sort_keys=True),
+    )
+    n = sum(v[0] for v in batches.values())
+    stats = _postings_stats_dict(
+        n, sum(v[1] for v in batches.values()), n, n_buckets
+    )
+    _write_postings_stats(spark, path, stats)
+    return stats
 
 
 def append_postings(
@@ -1815,7 +1886,6 @@ def append_postings(
     import json
     import os
 
-    from .dedup import md5_int31
     from .similarity import _read_sidecar_text
 
     spark = df.sparkSession
@@ -1828,30 +1898,14 @@ def append_postings(
             " mergeable stats; rebuild it to enable appends"
         )
     n_buckets = int(prev["n_buckets"])
-    toks = df.select(
-        _col(id_col).alias("doc_id"), F.explode(tokens(text)).alias("term")
-    ).filter(F.col("term") != "")
-    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    postings = tf.join(dl, "doc_id").withColumn(
-        "term_bucket",
-        (md5_int31(F.col("term")) % F.lit(n_buckets)).cast("int"),
-    )
-    postings.write.mode("append").partitionBy("term_bucket").parquet(path)
-    row = (
-        df.agg(F.count(F.lit(1)).alias("n_docs"))
-        .crossJoin(
-            dl.agg(
-                F.sum("dl").alias("sum_dl"),
-                F.count(F.lit(1)).alias("n_dl"),
-            )
-        )
-        .collect()[0]
+    n_docs, sum_dl, n_dl = _write_postings(
+        df, text, id_col, n_buckets,
+        lambda p: p.write.mode("append").partitionBy("term_bucket").parquet(path),
     )
     stats = _postings_stats_dict(
-        int(prev["n_docs"]) + int(row.n_docs),
-        int(prev["sum_dl"]) + int(row.sum_dl or 0),
-        int(prev["n_dl"]) + int(row.n_dl),
+        int(prev["n_docs"]) + n_docs,
+        int(prev["sum_dl"]) + sum_dl,
+        int(prev["n_dl"]) + n_dl,
         n_buckets,
     )
     _write_postings_stats(spark, path, stats)
@@ -2023,7 +2077,10 @@ def convert_postings_layout(
     ``<path>__convert`` sibling first (one distributed pass), then
     the old data directories move aside, the new ones move in (pure
     directory renames), and the stats sidecar recomputes from the
-    final store. A re-run after a crash at ANY point completes the
+    final store in one aggregate. ``to="stream"`` groups it by
+    ``_batch_id`` and writes the per-batch entries the streaming
+    admitter keeps (``_postings_batches``); ``to="batch"`` removes
+    them. A re-run after a crash at ANY point completes the
     swap instead of re-reading a half-swapped root (a complete
     staging dir short-circuits the rewrite). Returns the recomputed
     stats dict."""
@@ -2099,20 +2156,26 @@ def convert_postings_layout(
             fs.delete(p, True)  # already moved by a prior attempt
         else:
             fs.rename(p, dst)
-    prev = json.loads(
+    n_buckets = int(json.loads(
         _read_sidecar_text(spark, os.path.join(path, "_postings_stats"))
-    )
-    row = (
-        spark.read.parquet(path)
-        .select("doc_id", "dl")
-        .distinct()
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
-        .collect()[0]
-    )
-    stats = _postings_stats_dict(
-        int(row.n), int(row.s or 0), int(row.n), int(prev["n_buckets"])
-    )
-    _write_postings_stats(spark, path, stats)
+    )["n_buckets"])
+    store = spark.read.parquet(path)
+    if to == "stream":
+        stats = _write_batch_stats(
+            spark, path, _batch_lengths(store), n_buckets
+        )
+    else:
+        row = (
+            store.select("doc_id", "dl")
+            .distinct()
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
+            .collect()[0]
+        )
+        stats = _postings_stats_dict(
+            int(row.n), int(row.s or 0), int(row.n), n_buckets
+        )
+        _write_postings_stats(spark, path, stats)
+        fs.delete(hpath(path.rstrip("/") + "/_postings_batches"), True)
     fs.delete(old, True)
     fs.delete(tmp, True)
     return stats

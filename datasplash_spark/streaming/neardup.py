@@ -575,21 +575,33 @@ def postings_admitter(
     ``_batch_id=<id>`` partitions with dynamic OVERWRITE — a
     replayed batch rewrites exactly its own (batch, bucket) leaves,
     so the index is replay-idempotent keyed on the batch id (the
-    same contract as the near-dup/semantic/quota stores). After the
-    write, the stats sidecar RECOMPUTES from the full store
-    (idempotent by construction — no merge state to corrupt on
-    replay): one distinct (doc_id, dl) aggregate, store-sized but
-    postings-narrow. The stats line itself is written driver-side
-    through the Hadoop FileSystem API (``_write_postings_stats``),
-    so the refresh schedules no job beyond that aggregate.
+    same contract as the near-dup/semantic/quota stores).
+
+    Stats follow the same key. The write observes its batch's
+    ``(n, s)`` — docs with a token and their summed lengths — so no
+    job runs after it (a batch without a single token counts through
+    one aggregate instead, see ``text._write_postings``), and the
+    admitter stores them as that batch
+    id's entry in ``_postings_batches``, a sidecar only the store's
+    writers read. A replayed id overwrites its own entry, and the
+    ``_postings_stats`` totals the probes read are the sum of the
+    entries, so their size does not grow with the batch count and
+    no batch re-reads the store. A store without per-batch entries
+    (written by ``convert_postings_layout(to="stream")`` or
+    ``compact_postings`` before they wrote entries, or by an older
+    admitter) is seeded on its next admit from one ``groupBy
+    ("_batch_id")`` aggregate over the store; a new store seeds
+    empty without a query. Both sidecars are written driver-side
+    through the Hadoop FileSystem API (``_write_sidecar_text``).
 
     Caveats vs the batch path (:func:`..functions.text
     .append_postings`): documents with zero tokens produce no
     postings, so the streaming sidecar's ``n_docs`` counts only
     tokenized docs — probe scores equal the inline scorer exactly
     when every ingested doc has at least one token (pinned by the
-    e2e test). Duplicate doc_ids ACROSS batches double-count, as in
-    any append-only index — dedup upstream (the admitters compose).
+    e2e test). Duplicate doc_ids ACROSS batches double-count, in
+    the stats as in the postings, as in any append-only index —
+    dedup upstream (the admitters compose).
     LAYOUT NOTE: stream-grown stores use ``_batch_id=/term_bucket=``
     levels and are incompatible on one path with the flat layout of
     the batch ``text.append_postings`` (parquet partition discovery
@@ -597,58 +609,43 @@ def postings_admitter(
     switch with ``text.convert_postings_layout`` (one distributed
     pass, crash-safe swap).
     """
-    from pyspark.sql import functions as F
-
-    from ..functions.dedup import md5_int31
-    from ..functions.text import (
-        _postings_stats_dict,
-        _write_postings_stats,
-        tokens,
-    )
+    from ..functions.text import _write_batch_stats, _write_postings
 
     def admit(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        toks = batch_df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(tokens(text)).alias("term"),
-        ).filter(F.col("term") != "")
-        tf = toks.groupBy("doc_id", "term").agg(
-            F.count(F.lit(1)).alias("tf")
-        )
-        dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-        postings = (
-            tf.join(dl, "doc_id")
-            .withColumn(
-                "term_bucket",
-                (md5_int31(F.col("term")) % F.lit(n_buckets)).cast("int"),
-            )
-            .withColumn("_batch_id", F.lit(int(batch_id)))
-        )
-        (
-            postings.write.mode("overwrite")
+        batches = _read_batch_stats(spark, store_path)
+        _n_docs, sum_dl, n_dl = _write_postings(
+            batch_df, text, id_col, n_buckets,
+            lambda p: p.withColumn("_batch_id", F.lit(int(batch_id)))
+            .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("_batch_id", "term_bucket")
-            .parquet(store_path)
+            .parquet(store_path),
         )
-        row = (
-            spark.read.parquet(store_path)
-            .select("doc_id", "dl")
-            .distinct()
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("dl").alias("s"),
-            )
-            .collect()[0]
-        )
-        _write_postings_stats(
-            spark,
-            store_path,
-            _postings_stats_dict(
-                int(row.n), int(row.s or 0), int(row.n), int(n_buckets)
-            ),
-        )
+        batches[str(int(batch_id))] = [n_dl, sum_dl]
+        _write_batch_stats(spark, store_path, batches, int(n_buckets))
 
     return admit
+
+
+def _read_batch_stats(spark, store_path: str) -> dict:
+    """The per-batch entries of a stream-layout postings store (see
+    :func:`postings_admitter`): the ``_postings_batches`` sidecar when
+    it exists, else seeded from one aggregate over the store, else
+    empty for a store with no data yet. Existence is checked first, so
+    a new store runs no failing read."""
+    import json
+
+    from ..functions.similarity import _read_sidecar_text
+    from ..functions.text import _batch_lengths
+
+    sidecar = store_path.rstrip("/") + "/_postings_batches"
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(sidecar)
+    if jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+        return json.loads(_read_sidecar_text(spark, sidecar))
+    if not _store_has_data(spark, store_path):
+        return {}
+    return _batch_lengths(spark.read.parquet(store_path))
 
 
 def postings_ingest(
@@ -692,14 +689,16 @@ def compact_postings(
     compaction (the generic compactor would flatten the bucket
     layout and its single-id dedup would collapse a doc's posting
     list to one term). Self-heal dedup key is ``(doc_id, term)``
-    (keep the lowest batch), and the stats sidecar recomputes from
-    the store after the rewrite — the same idempotent-by-derivation
-    contract the admitter uses, so re-running after any partial
-    failure converges. Same ``keep_last`` and stopped-stream rules
-    as :func:`compact_store`. Returns partitions absorbed."""
+    (keep the lowest batch). After the rewrite, one aggregate over
+    the store grouped by ``_batch_id`` rewrites the admitter's
+    per-batch entries (``compact_id`` and each kept batch) and the
+    stats totals from them — derived from the store, so re-running
+    after any partial failure converges. Same ``keep_last`` and
+    stopped-stream rules as :func:`compact_store`. Returns partitions
+    absorbed."""
     from pyspark.sql import Window
 
-    from ..functions.text import _postings_stats_dict, _write_postings_stats
+    from ..functions.text import _batch_lengths, _write_batch_stats
 
     sc = spark.sparkContext
     jpath = sc._jvm.org.apache.hadoop.fs.Path(store_path)
@@ -749,13 +748,6 @@ def compact_postings(
     )
     for p in old_parts:
         fs.delete(p, True)
-    row = (
-        spark.read.parquet(store_path)
-        .select("doc_id", "dl")
-        .distinct()
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
-        .collect()[0]
-    )
     # driver-side sidecar read (r13): the stats file is a <1 KB
     # one-row text dir; a spark.read.text scan cost one scheduled
     # job per compaction
@@ -764,12 +756,10 @@ def compact_postings(
     prev = __import__("json").loads(
         _read_sidecar_text(spark, store_path + "/_postings_stats")
     )
-    _write_postings_stats(
+    _write_batch_stats(
         spark,
         store_path,
-        _postings_stats_dict(
-            int(row.n), int(row.s or 0), int(row.n),
-            int(prev["n_buckets"]),
-        ),
+        _batch_lengths(spark.read.parquet(store_path)),
+        int(prev["n_buckets"]),
     )
     return len(old_parts)

@@ -14,6 +14,7 @@ from datasplash_spark.functions import text as tx
 from datasplash_spark.pipeline import read_parquet_memo
 from datasplash_spark.sources import generate_input
 from datasplash_spark import operators as ops
+from tests.helpers import last_sql_execution, sql_executions_since
 
 
 def test_simhash_similar_docs_close(spark):
@@ -3802,6 +3803,39 @@ def test_append_postings_matches_union_inline(spark, tmp_path):
     assert inline == stored and len(inline) == 25
 
 
+def test_postings_writers_observe_stats_on_the_write(spark, tmp_path):
+    """materialize_postings and append_postings take n_docs, sum_dl
+    and n_dl from Observations on their write: one SQL execution each,
+    with docs that have no token counted in n_docs. An append whose
+    docs have no token at all leaves no observed row (AQE empties the
+    postings join) and still counts exactly."""
+    a = [(1, "alpha beta"), (2, ""), (3, "  "), (4, "beta beta gamma")]
+    b = [(5, "alpha"), (6, "")]
+    c = [(7, ""), (8, " ")]
+    dfa, dfb, dfc = (
+        generate_input(spark, rows, "doc_id bigint, text string")
+        for rows in (a, b, c)
+    )
+    path = str(tmp_path / "postings")
+    got = []
+    for write in (
+        lambda: tx.materialize_postings(dfa, path, n_buckets=8),
+        lambda: tx.append_postings(dfb, path),
+    ):
+        last = last_sql_execution(spark)
+        got.append(write())
+        assert len(sql_executions_since(spark, last)) == 1
+    got.append(tx.append_postings(dfc, path))
+    assert [(s["n_docs"], s["sum_dl"], s["n_dl"]) for s in got] == [
+        (4, 5, 2), (6, 6, 3), (8, 6, 3)
+    ]
+    terms = ["alpha", "beta"]
+    union = dfa.union(dfb).union(dfc)
+    assert sorted(map(tuple, tx.bm25_from_store(spark, path, terms).collect())) == sorted(
+        map(tuple, tx.bm25_scores(union, terms).collect())
+    )
+
+
 def test_store_listing_memo_identity_and_append_invalidation(
     spark, tmp_path
 ):
@@ -5898,6 +5932,37 @@ def test_append_ivf_crash_window_self_heal(spark, tmp_path):
         del appended
 
 
+def test_append_ivf_is_one_write_and_replay_writes_nothing(spark, tmp_path):
+    """append_ivf runs one SQL execution, the write with the id
+    anti-join inside it, and no separate isEmpty check; replaying a
+    committed append writes no data file (fast twin of
+    test_append_ivf_crash_window_self_heal's replay check)."""
+    import random
+
+    rng = random.Random(11)
+    mk = lambda i: (i, [rng.uniform(-1, 1) for _ in range(8)])
+    dfa = generate_input(
+        spark, [mk(i) for i in range(40)], "vec_id bigint, embedding array<double>"
+    )
+    dfb = generate_input(
+        spark, [mk(100 + i) for i in range(20)],
+        "vec_id bigint, embedding array<double>",
+    )
+    p = str(tmp_path / "ivf")
+    sim.materialize_ivf(dfa, p, n_cells=4)
+    manifests = []
+    for _ in range(2):
+        last = last_sql_execution(spark)
+        sim.append_ivf(dfb, p)
+        work = sql_executions_since(spark, last)
+        assert len(work) == 1, [d for d, _p, _j in work]
+        assert "isEmpty" not in work[0][0]
+        assert "InsertIntoHadoopFsRelationCommand" in work[0][1]
+        manifests.append(_store_manifest(p))
+    assert manifests[0] == manifests[1], "replay wrote into the store"
+    assert spark.read.parquet(p).count() == 60
+
+
 def test_append_lsh_replay_idempotent(spark, tmp_path):
     """append_lsh: same ledger discipline — committed-append replay
     is byte-identical; opt-out (skip_existing_ids=False) duplicates,
@@ -6819,6 +6884,44 @@ def test_sidecar_fastpath_requires_json(spark, tmp_path):
 
 def _part_files(d):
     return sorted(p.name for p in d.iterdir() if p.name.startswith("part-"))
+
+
+def test_sidecar_read_is_chunked_and_exact(spark, tmp_path, monkeypatch):
+    """_read_sidecar_text returns exactly spark.read.text's first line
+    for a 22 KB centroid sidecar and for a multi-chunk one whose
+    multi-byte UTF-8 characters straddle the chunk boundaries, and no
+    py4j response it takes exceeds 8,000 characters (one over ~8,190
+    costs a fixed ~44 ms)."""
+    import json
+    import random
+
+    rng = random.Random(3)
+    centroids = json.dumps(
+        [[rng.uniform(-1, 1) for _ in range(64)] for _ in range(16)]
+    )
+    wide = json.dumps({"t": "x" + "é€😀" * 3000}, ensure_ascii=False)
+    chunk, data = sim._SIDECAR_CHUNK_BYTES, wide.encode()
+    assert len(centroids) > 20000 and len(data) > 4 * chunk
+    # a UTF-8 continuation byte starts every chunk after the first
+    assert all(data[k] & 0xC0 == 0x80 for k in range(chunk, len(data), chunk))
+    client = spark.sparkContext._gateway._gateway_client
+    real, sizes = client.send_command, []
+
+    def spy(command, *args, **kwargs):
+        answer = real(command, *args, **kwargs)
+        sizes.append(len(answer))
+        return answer
+
+    for name, line in (("_ivf_centroids", centroids), ("_wide", wide)):
+        d = str(tmp_path / name)
+        sim._write_sidecar_text(spark, d, line)
+        want = spark.read.text(d).first()[0]
+        monkeypatch.setattr(client, "send_command", spy)
+        del sizes[:]
+        got = sim._read_sidecar_text(spark, d)
+        monkeypatch.undo()
+        assert got == want == line
+        assert sizes and max(sizes) <= 8000, max(sizes)
 
 
 def test_sidecar_writer_round_trips(spark, tmp_path):

@@ -18,7 +18,7 @@ from datasplash_spark.streaming import (
     write_stream,
 )
 
-from tests.helpers import contains_only
+from tests.helpers import contains_only, last_sql_execution, sql_executions_since
 
 
 def test_watch_new_files_is_streaming(spark, tmp_path):
@@ -1053,8 +1053,8 @@ def test_url_normalized_dedup_streaming(spark, tmp_path):
 
 def test_postings_ingest_streaming_and_replay(spark, tmp_path):
     """Streaming inverted-index ingestion: postings land
-    replay-idempotently per batch, the sidecar recomputes from the
-    store, and live probes equal the inline scorer over everything
+    replay-idempotently per batch, the sidecar totals the per-batch
+    entries, and live probes equal the inline scorer over everything
     ingested. Re-running the admitter with the same batch id must
     not change the index."""
     from datasplash_spark.functions import text as tx
@@ -1089,6 +1089,168 @@ def test_postings_ingest_streaming_and_replay(spark, tmp_path):
         for r in tx.bm25_from_store(spark, store, terms).collect()
     }
     assert replayed == inline
+
+
+def _stream_stats(store):
+    """``(per-batch entries, totals)``: the ``_postings_batches`` and
+    ``_postings_stats`` sidecars of a stream-layout postings store."""
+    import json
+    import os
+
+    def read(name):
+        with open(os.path.join(store, name, "part-00000.txt")) as fh:
+            return json.loads(fh.read())
+
+    return read("_postings_batches"), read("_postings_stats")
+
+
+def _assert_postings_stats_exact(spark, store, union, terms):
+    """The totals sidecar keeps its keys and equals both the sum of the
+    per-batch entries and the store-wide distinct (doc_id, dl)
+    recompute; bm25_from_store equals bm25_scores over ``union``."""
+    from datasplash_spark.functions import text as tx
+
+    batches, stats = _stream_stats(store)
+    assert set(stats) == {"n_docs", "sum_dl", "n_dl", "avgdl", "n_buckets"}
+    row = (
+        spark.read.parquet(store).select("doc_id", "dl").distinct()
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")).first()
+    )
+    assert (stats["n_docs"], stats["sum_dl"], stats["n_dl"]) == (
+        row.n, row.s, row.n
+    )
+    assert [sum(v[i] for v in batches.values()) for i in (0, 1)] == [
+        row.n, row.s
+    ]
+    got, want = (
+        sorted(tuple(r) for r in df.collect())
+        for df in (
+            tx.bm25_from_store(spark, store, terms),
+            tx.bm25_scores(union, terms),
+        )
+    )
+    assert got == want and got
+
+
+def test_postings_admit_runs_only_its_write(spark, tmp_path):
+    """One admit runs exactly one SQL execution, the postings write,
+    and no job outside it: the batch's (n, sum dl) come from an
+    Observation on the write, and nothing reads the store afterwards.
+    The first admit to a new store runs no query to find the
+    per-batch sidecar missing."""
+    from datasplash_spark.streaming import postings_admitter
+
+    store = str(tmp_path / "store")
+    rows = [(i, f"alpha beta doc{i}") for i in range(8)]
+    df = generate_input(spark, rows, "doc_id bigint, text string")
+    admit = postings_admitter(store, n_buckets=8)
+    sc = spark.sparkContext
+    for batch_id, part in enumerate(
+        (df.where("doc_id < 4"), df.where("doc_id >= 4"))
+    ):
+        last, group = last_sql_execution(spark), f"admit-{batch_id}"
+        sc.setJobGroup(group, group)
+        try:
+            admit(part, batch_id)
+        finally:
+            sc._jsc.clearJobGroup()
+        work = sql_executions_since(spark, last)
+        assert len(work) == 1, [d for d, _p, _j in work]
+        _desc, plan, n_jobs = work[0]
+        assert "InsertIntoHadoopFsRelationCommand" in plan
+        assert not [
+            line for line in plan.splitlines()
+            if "Location:" in line and "store" in line
+        ], plan
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == n_jobs
+    batches, _stats = _stream_stats(store)
+    assert batches == {"0": [4, 12], "1": [4, 12]}
+
+
+def test_postings_admitter_per_batch_entries_and_replay(spark, tmp_path):
+    """Each batch id keeps its own (n, sum dl) entry; replaying batch
+    1 after batches 0-2 overwrites its entry and changes neither
+    sidecar, and the totals stay equal to the store-wide recompute
+    with probes equal to the inline scorer over the union."""
+    from datasplash_spark.streaming import postings_admitter
+
+    store = str(tmp_path / "store")
+    rows = [(i, f"alpha beta doc{i} " + "alpha " * (i % 4)) for i in range(12)]
+    df = generate_input(spark, rows, "doc_id bigint, text string")
+    parts = [df.where(f"doc_id % 3 = {k}") for k in range(3)]
+    admit = postings_admitter(store, n_buckets=8)
+    for k, part in enumerate(parts):
+        admit(part, k)
+    before = _stream_stats(store)
+    assert sorted(before[0]) == ["0", "1", "2"]
+    admit(parts[1], 1)
+    assert _stream_stats(store) == before
+    _assert_postings_stats_exact(spark, store, df, ["alpha", "doc4"])
+
+
+def test_postings_stats_seed_from_store_on_next_admit(spark, tmp_path):
+    """Stores without admitter-written per-batch entries stay exact
+    after their next admit: one an older admitter wrote (its entries
+    are seeded from the store), and ones convert_postings_layout and
+    compact_postings wrote (their entries come from the store-wide
+    aggregate grouped by _batch_id)."""
+    import shutil
+
+    from datasplash_spark.functions import text as tx
+    from datasplash_spark.streaming import compact_postings, postings_admitter
+
+    rows = [(i, f"alpha beta doc{i} " + "gamma " * (i % 3)) for i in range(16)]
+    df = generate_input(spark, rows, "doc_id bigint, text string")
+    parts = [df.where(f"doc_id % 4 = {k}") for k in range(4)]
+    terms = ["alpha", "gamma", "doc5"]
+
+    older = str(tmp_path / "older")
+    admit = postings_admitter(older, n_buckets=8)
+    admit(parts[0], 0)
+    admit(parts[1], 1)
+    shutil.rmtree(older + "/_postings_batches")
+    admit(parts[2], 2)
+    assert sorted(_stream_stats(older)[0]) == ["0", "1", "2"]
+    _assert_postings_stats_exact(
+        spark, older, parts[0].union(parts[1]).union(parts[2]), terms
+    )
+
+    converted = str(tmp_path / "converted")
+    tx.materialize_postings(parts[0], converted, n_buckets=8)
+    tx.convert_postings_layout(spark, converted, to="stream")
+    assert sorted(_stream_stats(converted)[0]) == ["-1"]
+    postings_admitter(converted, n_buckets=8)(parts[1], 7)
+    _assert_postings_stats_exact(
+        spark, converted, parts[0].union(parts[1]), terms
+    )
+
+    compacted = str(tmp_path / "compacted")
+    admit = postings_admitter(compacted, n_buckets=8)
+    for k in range(3):
+        admit(parts[k], k)
+    assert compact_postings(spark, compacted, keep_last=1) == 2
+    assert sorted(_stream_stats(compacted)[0]) == ["-1", "2"]
+    admit(parts[3], 3)
+    _assert_postings_stats_exact(spark, compacted, df, terms)
+
+
+def test_postings_stats_count_cross_batch_duplicates_twice(spark, tmp_path):
+    """A doc_id admitted in two batches counts twice in the stats, as
+    its postings already do (an append-only index; dedup upstream):
+    the totals are the sum of the per-batch entries, not a store-wide
+    distinct."""
+    from datasplash_spark.streaming import postings_admitter
+
+    store = str(tmp_path / "store")
+    rows = [(i, f"alpha doc{i}") for i in range(6)]
+    df = generate_input(spark, rows, "doc_id bigint, text string")
+    admit = postings_admitter(store, n_buckets=8)
+    admit(df.where("doc_id <= 3"), 0)
+    admit(df.where("doc_id >= 3"), 1)
+    batches, stats = _stream_stats(store)
+    assert batches == {"0": [4, 8], "1": [3, 6]}
+    assert (stats["n_docs"], stats["sum_dl"], stats["n_dl"]) == (7, 14, 7)
+    assert spark.read.parquet(store).where("doc_id = 3").count() == 4
 
 
 def test_compact_postings_preserves_probe_parity(spark, tmp_path):
