@@ -73,16 +73,27 @@ def _affine_mod(h: Column, a: int, b: int) -> Column:
     return (F.lit(a) * h + F.lit(b)) % F.lit(MERSENNE_P)
 
 
+def _windows(text: ColumnLike, k: int) -> Column:
+    """Every run of ``k`` consecutive tokens of ``text``, space-joined,
+    in order; texts shorter than ``k`` tokens yield their single
+    full-token join. The token array is bound once per row (the outer
+    one-element ``transform``): a window lambda that referenced
+    ``tokens(text)`` itself would re-run ``split(lower(text))`` once
+    per window, O(n²) in tokens per document."""
+
+    def windows(toks: Column) -> Column:
+        return F.transform(
+            F.sequence(F.lit(1), F.greatest(F.size(toks) - k + 1, F.lit(1))),
+            lambda i: F.array_join(F.slice(toks, i, k), " "),
+        )
+
+    return F.transform(F.array(tokens(text)), windows)[0]
+
+
 def shingles(text: ColumnLike, k: int = 3) -> Column:
     """Distinct word k-shingles (k tokens joined by a space); texts
     shorter than k tokens yield their single full-token join."""
-    toks = tokens(text)
-    n = F.size(toks)
-    windows = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1))),
-        lambda i: F.array_join(F.slice(toks, i, k), " "),
-    )
-    return F.array_distinct(windows)
+    return F.array_distinct(_windows(text, k))
 
 
 def minhash_signature(
@@ -781,12 +792,7 @@ def token_windows(text: ColumnLike, k: int = 8) -> Column:
     Better"): a window that occurs twice anywhere in the corpus marks
     a repeated span. Texts shorter than ``k`` tokens yield the single
     full-token join."""
-    toks = tokens(text)
-    n = F.size(toks)
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1))),
-        lambda i: F.array_join(F.slice(toks, i, k), " "),
-    )
+    return _windows(text, k)
 
 
 def repeated_window_counts(

@@ -178,7 +178,39 @@ def make_session(options: PipelineOptions | None = None) -> SparkSession:
         # unrolled dot inside a join+window stage): 5.0 s -> 0.62 s
         # executor CPU, wall 5.4 -> 0.93 s, identical results. Scale-
         # independent: the limit tracks the JVM, not the data.
+        # Re-measured against 65535 with the class cache below warm
+        # (4-vCPU host, local[4]; SCALING.md "Codegen class cache"):
+        # 8000 is faster on curate's contrastive pass (0.69-0.72 vs
+        # 0.88-0.93 s) and at sf0.1 on contrastive_pairs (0.89-1.00
+        # vs 2.42-2.57 s) and semantic_dedup (0.87-0.89 vs 1.59-1.60
+        # s); slower on weighted_sample_det (0.87 vs 0.58-0.60 s) and
+        # edit_verify (0.57 vs 0.51-0.54 s).
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
+        # Keep a long-lived session's generated classes compiled. Spark
+        # caches compiled classes in one LRU per JVM, keyed by source
+        # and context classloader (a stage compiles once on a driver
+        # thread and once on a task thread), of 100 entries by
+        # default. A warm pipebench curate cycle needs ~204, so each
+        # class was evicted before its reuse and every cycle
+        # recompiled ~208 (~0.9 s of Janino, then cold bytecode under
+        # HotSpot). Entries needed, counted with CodegenMetrics on a
+        # 4-vCPU host at local[4]: curate 182 per cycle, serve_ingest
+        # 28, one bench.py entry at most 64, the whole sf0.1 bench
+        # sweep 941 (warm-ups and store probes included). 1000 holds
+        # every set a session repeats, a second bench sweep included:
+        # warm curate cycles compile 0 classes (was ~208), the bench
+        # sweep's timed entries 774 (was 1,732), Tier-1, which runs
+        # each test once, 4,819 (was 9,080), at unchanged peak RSS. A
+        # static conf: it must be set before the first session of
+        # the JVM; extra_conf overrides it.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # A whole-stage class is named after its codegen stage id,
+        # which AQE assigns in the order query stages become ready,
+        # so a plan with racing independent stages (bm25_scores's
+        # broadcast and shuffle sides) produced new class names, and
+        # compiled new classes, on most calls. Without the id the same
+        # stage reuses its class; plans and results are unchanged.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in opts.extra_conf.items():
         builder = builder.config(k, str(v))

@@ -10,7 +10,9 @@ For each registry query: build the DataFrame, write its
 run the bench's timed action (``.count()``) ``reps`` times with the
 bench's inter-measurement hygiene, and print per-stage wall/cpu from
 the AppStatusStore (``bench._stage_rows``) so the expensive stage is
-visible without a UI.
+visible without a UI. Each rep line also carries the generated classes
+it compiled and their compile ms (``_codegen``): a warm rep that keeps
+compiling shows a codegen class cache thrash.
 """
 
 from __future__ import annotations
@@ -65,6 +67,19 @@ def _job_rows(spark):
     return out
 
 
+def _codegen(spark) -> tuple[int, float]:
+    """``(classes compiled, compile ms)`` so far in this JVM: Spark's
+    ``CodegenMetrics`` compile count (one per class-cache miss) and
+    ``CodeGenerator``'s accumulated compile time."""
+    jvm = spark._jvm
+    count = (
+        jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount()
+    )
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return count, nanos / 1e6
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
@@ -107,9 +122,11 @@ def main() -> int:
         for rep in range(args.reps):
             pre = _stage_rows(spark)
             pre_jobs = _job_rows(spark) if args.jobs else {}
+            cg0 = _codegen(spark)
             t0 = time.time()
             n = fn(spark, args.sf_dir).count()
             dt = time.time() - t0
+            cg1 = _codegen(spark)
             post = _stage_rows(spark)
             if args.jobs and rep == args.reps - 1:
                 post_jobs = _job_rows(spark)
@@ -133,7 +150,9 @@ def main() -> int:
             run = sum(v[0] - pre.get(k, (0, 0, 0, ""))[0]
                       for k, v in post.items()) / 1e3
             print(f"## {name} rep{rep}: wall={dt:.3f}s jvm_run={run:.2f}s "
-                  f"jvm_cpu={cpu:.2f}s rows={n}")
+                  f"jvm_cpu={cpu:.2f}s rows={n} "
+                  f"compiles={cg1[0] - cg0[0]} "
+                  f"compile_ms={cg1[1] - cg0[1]:.0f}")
             if rep == args.reps - 1:
                 new = {k: v for k, v in post.items()
                        if k not in pre or v[0] != pre[k][0]}

@@ -1102,6 +1102,39 @@ def test_quota_per_key_caps_and_determinism(spark):
     ]
 
 
+@pytest.mark.parametrize("k", [1, 2, 3])
+def test_shingle_windows_tokenize_once_and_match_inline_form(spark, k):
+    """``shingles`` and ``token_windows`` bind the token array once per
+    row and return, element by element, what the inline form (the
+    tokens re-split inside the window lambda, once per window) does:
+    NULL text, ``""``, texts shorter than ``k`` tokens, and double,
+    leading and trailing spaces (empty tokens) included."""
+    from datasplash_spark.functions.text import tokens
+
+    def inline_windows(text, k):
+        toks = tokens(text)
+        return F.transform(
+            F.sequence(F.lit(1), F.greatest(F.size(toks) - k + 1, F.lit(1))),
+            lambda i: F.array_join(F.slice(toks, i, k), " "),
+        )
+
+    texts = [None, "", " ", "a", "a b", "x  y", " lead", "trail ",
+             "The cat  sat on the mat the cat", "a b a b a b"]
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    pairs = {
+        "shingles": (F.array_distinct(inline_windows("text", k)),
+                     dd.shingles("text", k)),
+        "token_windows": (inline_windows("text", k),
+                          dd.token_windows("text", k)),
+    }
+    for name, (old, new) in pairs.items():
+        assert new._jc.toString().count("split(") == 1, name
+        rows = df.select("id", old.alias("old"), new.alias("new")).collect()
+        assert len(rows) == len(texts)
+        for r in rows:
+            assert r.old == r.new, (name, texts[r.id], r.old, r.new)
+
+
 def test_source_overlap_counts_shared_shingles(spark):
     docs = generate_input(
         spark,

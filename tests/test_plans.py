@@ -1400,6 +1400,54 @@ def test_make_session_caps_codegen_method_size(spark):
     assert spark.conf.get("spark.sql.codegen.hugeMethodLimit") == "8000"
 
 
+def _codegen_compiles(spark) -> int:
+    """Generated classes compiled so far in this JVM (one per
+    class-cache miss)."""
+    return (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount()
+    )
+
+
+def test_make_session_keeps_repeated_plans_compiled(spark):
+    """make_session sizes Spark's codegen class cache (an LRU of 100
+    classes by default) above a long-lived session's working set: 150
+    distinct projections run twice, and the second pass finds their
+    classes still compiled. At Spark's default the first pass evicts
+    each class before its reuse and the second pass recompiles all."""
+    from pyspark.sql import functions as F
+
+    def one_pass() -> int:
+        before = _codegen_compiles(spark)
+        for i in range(150):
+            spark.range(4).select(F.col("id") * F.lit(i + 1000)).collect()
+        return _codegen_compiles(spark) - before
+
+    first = one_pass()
+    assert first >= 150, first
+    second = one_pass()
+    assert second <= 5, (first, second)
+
+
+def test_make_session_reuses_classes_across_stage_ids(spark):
+    """A stage's generated class does not carry its codegen stage id:
+    swapping a union's sides renumbers its two stages, and the swapped
+    query compiles nothing. With the id in the class name (Spark's
+    default) both stages compile again."""
+    from pyspark.sql import functions as F
+
+    def side(m):
+        return spark.range(6).select((F.col("id") * m + 7).alias("v"))
+
+    def compiles(df) -> int:
+        before = _codegen_compiles(spark)
+        df.collect()
+        return _codegen_compiles(spark) - before
+
+    assert compiles(side(31).union(side(37))) > 0
+    assert compiles(side(37).union(side(31))) == 0
+
+
 def _driver_table_frames(spark, tmp_path):
     """The public frames whose plans carry a driver-built table: the
     salt widths of contrastive_pairs, the query terms and probes of

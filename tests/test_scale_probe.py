@@ -117,3 +117,21 @@ def test_profile_query_names_jobs_by_sql_execution(spark):
     assert len(names) == 1, names
     (name,) = names
     assert name.startswith("[sql ") and "count at" in name, name
+
+
+def test_profile_query_counts_codegen_compiles(spark):
+    """``profile_query._codegen`` reads the JVM's class compiles and
+    compile ms: a never-seen projection adds at least one compile and
+    some compile time, and running it again adds none."""
+    import profile_query
+
+    def run():
+        spark.range(3).select((F.col("id") * 7919 + 104729).alias("x")).collect()
+
+    n0, ms0 = profile_query._codegen(spark)
+    run()
+    n1, ms1 = profile_query._codegen(spark)
+    run()
+    n2, _ = profile_query._codegen(spark)
+    assert n1 > n0 and ms1 > ms0
+    assert n2 == n1
