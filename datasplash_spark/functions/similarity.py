@@ -10,10 +10,16 @@ LLM-data-pipeline extension (BASELINE.json north_star). Two tiers:
   LSH: probe only the query's bucket. The scale path: bucket keys
   shuffle, vectors don't move; recall is tunable via bits/tables.
 
-Dot products run as ``F.zip_with`` + ``F.aggregate`` — JVM-side
-whole-stage-codegen'd loops, no Python. (A Pandas-UDF/numpy variant is
-a worthwhile alternative once vectors are wide; at d≲1024 the
-expression form avoids Arrow transfer entirely.)
+Every vector fold (:func:`dot`, :func:`norm`, :func:`cosine`,
+:func:`ivf_assign`, :func:`hyperplane_bucket`) is a ``zip_with`` +
+``aggregate`` loop in the JVM, no Python. Given column names or
+literal Python vectors, a builder renders the fold as SQL text and
+parses it with ONE ``F.expr``: building the same tree from Python
+lambdas costs a py4j round-trip per node (~2,900 for a 16-plane
+bucket). ``Column`` inputs keep the lambda fold, which builds the
+same tree and is the reference the equivalence tests use. (A
+Pandas-UDF/numpy variant is a worthwhile alternative once vectors are
+wide; at d≲1024 the expression form avoids Arrow transfer entirely.)
 """
 
 from __future__ import annotations
@@ -42,6 +48,13 @@ def _sql_double(x: float) -> str:
     return repr(x) + "D"
 
 
+def _sql_vec(xs) -> str:
+    """array<double> literal as SQL text (see :func:`lit_vec`)."""
+    if not xs:
+        return "CAST(array() AS array<double>)"
+    return "array(" + ",".join(_sql_double(x) for x in xs) + ")"
+
+
 def lit_vec(xs) -> Column:
     """array<double> literal built as ONE parsed SQL expression
     (r13 optimization, guide §1.2 step 2): the former
@@ -50,19 +63,65 @@ def lit_vec(xs) -> Column:
     build a 16×64 centroid fold, charged to every embedding query's
     plan construction. A generated SQL string is one round-trip and
     parses to bit-identical Literals (~300× faster to build)."""
-    if not xs:
-        return F.expr("CAST(array() AS array<double>)")
-    return F.expr("array(" + ",".join(_sql_double(x) for x in xs) + ")")
+    return F.expr(_sql_vec(xs))
 
 
-def lit_vec_int(xs) -> Column:
-    """array<int> literal as one parsed SQL expression (see
-    :func:`lit_vec`)."""
-    if not xs:
-        return F.expr("CAST(array() AS array<int>)")
-    return F.expr(
-        "array(" + ",".join(f"CAST({int(x)} AS INT)" for x in xs) + ")"
+#: A column name the SQL renderer takes: dot-separated identifiers,
+#: split the way ``F.col`` splits them. Other names (spaces, backticks,
+#: leading digits) take the ``Column`` path.
+_NAME = re.compile(r"[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*")
+
+
+def _sql_operand(x) -> str | None:
+    """SQL text for a vector operand: a plain or qualified column name
+    (each part backquoted, so a keyword still names a column) or a
+    literal Python vector. ``None`` for anything else — a ``Column``,
+    which only the lambda fold can take."""
+    if isinstance(x, str):
+        if _NAME.fullmatch(x):
+            return ".".join(f"`{p}`" for p in x.split("."))
+        return None
+    if isinstance(x, (list, tuple)):
+        return _sql_vec(x)
+    return None
+
+
+def _column(x) -> Column:
+    """The ``Column`` an operand stands for on the lambda-fold path."""
+    return lit_vec(x) if isinstance(x, (list, tuple)) else _col(x)
+
+
+def _lambda_var(base: str, *names) -> str:
+    """A lambda variable name that no referenced column name can
+    resolve to: inside a lambda body, a name whose first part equals a
+    lambda variable (case-insensitively, as the analyzer compares
+    them) reads the variable instead of the column."""
+    taken = {n.split(".")[0].lower() for n in names if isinstance(n, str)}
+    while base.lower() in taken:
+        base += "_"
+    return base
+
+
+def _dot_sql(a: str, b: str, finish: str = "") -> str:
+    """:func:`dot`'s fold over two rendered operands. The lambdas
+    reference only their own variables, so no column can collide with
+    them. ``finish`` is an optional ``acc -> …`` finish lambda."""
+    return (
+        f"aggregate(zip_with({a}, {b}, "
+        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        f"0.0D, (acc, v) -> acc + v{finish})"
     )
+
+
+def _norm_sql(a: str) -> str:
+    return f"sqrt({_dot_sql(a, a)})"
+
+
+def _cos_sql(a: str, b: str, denom: str = "") -> str:
+    """:func:`cosine`'s tree over two rendered operands; ``denom`` is
+    the norms' product when the caller has them as columns."""
+    d = f"({denom or _norm_sql(a) + ' * ' + _norm_sql(b)})"
+    return f"CASE WHEN {d} > 0 THEN {_dot_sql(a, b)} / {d} ELSE 0.0D END"
 
 
 def dot_unrolled(a_name: str, b_name: str, dim: int) -> Column:
@@ -94,44 +153,18 @@ def dot_unrolled(a_name: str, b_name: str, dim: int) -> Column:
     return F.expr("0.0D" + terms)
 
 
-def dot_lit_fold(a_name: str, q: list[float]) -> Column:
-    """Dot of a vector COLUMN against a LITERAL query vector — the
-    EXACT expression tree ``dot(col, lit_vec(q))`` builds (zip_with
-    → double casts → left-to-right aggregate from 0.0D), but parsed
-    from one SQL string instead of assembled through per-lambda py4j
-    round-trips, so it is ~100× cheaper to CONSTRUCT per probe while
-    evaluation stays the interpreted HOF fold. Deliberately NOT a
-    flat unrolled sum: a sum with the query values inlined generates
-    per-probe-unique whole-stage-codegen source, and the janino
-    compile per distinct query (~0.5-1 s) dwarfs anything the flat
-    evaluation saves in single-query serving (measured: the unrolled
-    variant REGRESSED the 8-probe store benches 3.5→10.3 s).
-    ``a_name`` must be a plain column name."""
-    arr = "array(" + ",".join(_sql_double(x) for x in q) + ")"
-    return F.expr(
-        f"aggregate(zip_with({a_name}, {arr}, "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "0.0D, (acc, v) -> acc + v)"
-    )
-
-
-def norm_fold(a_name: str) -> Column:
-    """``norm`` of a plain-named vector column as one parsed SQL
-    string (same tree as ``sqrt(dot(a, a))``; see
-    :func:`dot_lit_fold` for why probes use folds, not flat sums)."""
-    return F.expr(
-        f"sqrt(aggregate(zip_with({a_name}, {a_name}, "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "0.0D, (acc, v) -> acc + v))"
-    )
-
-
 def dot(a: ColumnLike, b: ColumnLike) -> Column:
     """Σ aᵢ·bᵢ in double precision, left-to-right (matches DuckDB
-    ``list_dot_product`` evaluation order for oracle exactness)."""
+    ``list_dot_product`` evaluation order for oracle exactness). Each
+    operand is a column name, a ``Column`` or a literal vector."""
+    sa, sb = _sql_operand(a), _sql_operand(b)
+    if sa is not None and sb is not None:
+        return F.expr(_dot_sql(sa, sb))
     return F.aggregate(
         F.zip_with(
-            _col(a), _col(b), lambda x, y: x.cast("double") * y.cast("double")
+            _column(a),
+            _column(b),
+            lambda x, y: x.cast("double") * y.cast("double"),
         ),
         F.lit(0.0),
         lambda acc, v: acc + v,
@@ -139,11 +172,17 @@ def dot(a: ColumnLike, b: ColumnLike) -> Column:
 
 
 def norm(a: ColumnLike) -> Column:
+    sa = _sql_operand(a)
+    if sa is not None:
+        return F.expr(_norm_sql(sa))
     return F.sqrt(dot(a, a))
 
 
 def cosine(a: ColumnLike, b: ColumnLike) -> Column:
-    """Cosine similarity of two vector columns (0 when either is 0)."""
+    """Cosine similarity of two vectors (0 when either is 0)."""
+    sa, sb = _sql_operand(a), _sql_operand(b)
+    if sa is not None and sb is not None:
+        return F.expr(_cos_sql(sa, sb))
     denom = norm(a) * norm(b)
     return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
 
@@ -154,42 +193,33 @@ def brute_force_topk(
     k: int = 10,
     vec_col: ColumnLike = "embedding",
     id_col: ColumnLike = "vec_id",
-    trusted_dim: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k for one query vector.
 
     Scores round to 9 dp before ranking and ties break on id, so the
     result set is engine-independent (oracle-stable).
 
-    ``trusted_dim``: when the caller has already validated that every
-    stored vector has exactly this width (the materialized-store
-    probes do — store writes fix the dimension), the score builds
-    from single-parse SQL folds with the query norm computed
-    driver-side — same values, same IEEE op order, ~100× cheaper to
-    construct per probe, and (unlike a flat unrolled sum) no
-    per-probe whole-stage-codegen recompile: see
-    :func:`dot_lit_fold`."""
-    if (
-        trusted_dim
-        and trusted_dim == len(query_vec)
-        and isinstance(vec_col, str)
-        and isinstance(id_col, str)
-    ):
-        # norm(q) over a literal is driver-computable: _pynorm runs
-        # the identical left-to-right double sum + sqrt
-        denom = norm_fold(vec_col) * F.lit(_pynorm(query_vec))
-        sc = F.when(
-            denom > 0, dot_lit_fold(vec_col, query_vec) / denom
-        ).otherwise(F.lit(0.0))
-        scored = df.select(
-            F.col(id_col).alias("vec_id"),
-            F.round(sc, 9).alias("score"),
+    For a named ``vec_col`` the score is :func:`cosine`'s value with
+    the query norm computed driver-side (:func:`_pynorm` runs the same
+    left-to-right sum and sqrt) and multiplied in by the row norm's
+    finish lambda: the product keeps ``norm(v) * norm(q)``'s order,
+    and the per-query constant stays inside the interpreted fold
+    instead of becoming a literal in generated source, where each
+    query vector would compile its own class. The score stays a fold,
+    not a flat unrolled sum: inlining the query values made every
+    probe compile its own class (~0.5-1 s each), and the unrolled
+    variant regressed the 8-probe store benches 3.5 → 10.3 s."""
+    sv = _sql_operand(vec_col)
+    if sv is not None:
+        denom = _dot_sql(
+            sv, sv, f", acc -> sqrt(acc) * {_sql_double(_pynorm(query_vec))}"
         )
-        return scored.orderBy(F.desc("score"), F.asc("vec_id")).limit(k)
-    q = lit_vec(query_vec)
+        sc = F.expr(_cos_sql(sv, _sql_vec(query_vec), denom))
+    else:
+        sc = cosine(vec_col, query_vec)
     scored = df.select(
         _col(id_col).alias("vec_id"),
-        F.round(cosine(_col(vec_col), q), 9).alias("score"),
+        F.round(sc, 9).alias("score"),
     )
     return scored.orderBy(F.desc("score"), F.asc("vec_id")).limit(k)
 
@@ -212,11 +242,21 @@ def hyperplane_bucket(
     vec: ColumnLike, planes: list[list[float]]
 ) -> Column:
     """LSH bucket id: sign bits of the vector against each plane."""
+    sv = _sql_operand(vec)
+    if sv is not None:
+        return F.expr(
+            "CAST(0 AS BIGINT)"
+            + "".join(
+                f" + CASE WHEN {_dot_sql(sv, _sql_vec(p))} >= 0 "
+                f"THEN shiftleft(CAST(1 AS BIGINT), {i}) "
+                "ELSE CAST(0 AS BIGINT) END"
+                for i, p in enumerate(planes)
+            )
+        )
     acc = F.lit(0).cast("long")
     for i, plane in enumerate(planes):
-        p = lit_vec(plane)
         acc = acc + F.when(
-            dot(vec, p) >= 0, F.shiftleft(F.lit(1).cast("long"), i)
+            dot(vec, plane) >= 0, F.shiftleft(F.lit(1).cast("long"), i)
         ).otherwise(F.lit(0).cast("long"))
     return acc
 
@@ -247,38 +287,63 @@ def ivf_centroids(
     return [[float(x) for x in r.v] for r in rows]
 
 
-def _centroid_table(centroids: list[list[float]]) -> Column:
+def _centroid_table(centroids: list[list[float]]) -> str:
     """The ``array<struct<cid, cvec, cnorm>>`` table that
-    :func:`ivf_assign` folds over, as ONE string literal parsed by
-    ``from_json``, which the optimizer folds to one array Literal.
-    The per-element ``F.lit`` form paid a py4j round-trip per float
+    :func:`ivf_assign` folds over, as SQL text: ONE string literal
+    parsed by ``from_json``, which the optimizer folds to one array
+    Literal. Per-element literals paid a py4j round-trip per float
     (~1.7 s of driver time per query at 16×64 — see :func:`lit_vec`),
-    and an ``array(named_struct(...))`` SQL string still left 16×64
+    and an ``array(named_struct(...))`` string still left 16×64
     literal nodes to parse and analyse on every build.
 
     ``json.dumps`` writes each double's shortest round-trip repr
     (NaN/±Infinity as bare tokens, which Spark's JSON reader accepts),
-    so every component and norm arrives bit-exact; ``FAILFAST`` makes
-    a table the reader cannot type raise instead of PERMISSIVE's
-    silent NULL cells."""
+    so every component and norm arrives bit-exact; the text holds only
+    numbers and the three keys, so it needs no SQL escaping.
+    ``FAILFAST`` makes a table the reader cannot type raise instead of
+    PERMISSIVE's silent NULL cells."""
     table = [
         {"cid": i, "cvec": [float(x) for x in c], "cnorm": _pynorm(c)}
         for i, c in enumerate(centroids)
     ]
-    return F.from_json(
-        F.lit(json.dumps(table)),
-        "array<struct<cid:int,cvec:array<double>,cnorm:double>>",
-        {"mode": "FAILFAST"},
+    return (
+        f"from_json('{json.dumps(table)}', "
+        "'array<struct<cid:int,cvec:array<double>,cnorm:double>>', "
+        "map('mode', 'FAILFAST'))"
+    )
+
+
+def _ivf_assign_sql(
+    vec: ColumnLike, centroids: list[list[float]], norm_col: ColumnLike | None
+) -> str | None:
+    """:func:`ivf_assign`'s fold as SQL text; ``None`` when ``vec`` or
+    ``norm_col`` is a ``Column``."""
+    if not centroids:
+        raise ValueError("ivf_assign: centroids must be non-empty")
+    sv = _sql_operand(vec)
+    if sv is None:
+        return None
+    snv = _norm_sql(sv) if norm_col is None else _sql_operand(norm_col)
+    if snv is None:
+        return None
+    acc = _lambda_var("acc", vec, norm_col)
+    c = _lambda_var("c", vec, norm_col)
+    sc = f"round({_cos_sql(sv, c + '.cvec', f'{snv} * {c}.cnorm')}, 9)"
+    return (
+        f"aggregate({_centroid_table(centroids)}, "
+        f"named_struct('cid', -1, 'score', {_sql_double(float('-inf'))}), "
+        f"({acc}, {c}) -> CASE WHEN {sc} > {acc}.score "
+        f"THEN named_struct('cid', {c}.cid, 'score', {sc}) ELSE {acc} END)"
     )
 
 
 def ivf_assign(
     vec: ColumnLike,
     centroids: list[list[float]],
-    norm_col: Column | None = None,
+    norm_col: ColumnLike | None = None,
 ) -> Column:
     """Nearest-centroid assignment (max cosine, ties → lowest cell
-    id) as one ``F.aggregate`` fold over a literal centroid array
+    id) as one ``aggregate`` fold over a literal centroid array
     (:func:`_centroid_table`): a single sequential expression per row
     — no shuffle, no N×K row blowup, no re-inlined subtrees (the
     MinHash anti-lesson). Returns
@@ -291,13 +356,16 @@ def ivf_assign(
     row norm is hoisted out of the loop (pass a precomputed column via
     ``norm_col`` to share it across the row) — one dot product per
     centroid instead of three. The float ops stay bit-identical to
-    ``cosine()``: same left-to-right sums, same sqrt/multiply order."""
-    if not centroids:
-        raise ValueError("ivf_assign: centroids must be non-empty")
-    v = _col(vec)
-    nv = norm(v) if norm_col is None else norm_col
+    ``cosine()``: same left-to-right sums, same sqrt/multiply order.
 
-    arr = _centroid_table(centroids)
+    With named ``vec``/``norm_col`` the fold is one parsed SQL string
+    whose outer lambda variables are picked so neither name resolves
+    to them; a ``Column`` takes the lambda fold."""
+    sql = _ivf_assign_sql(vec, centroids, norm_col)
+    if sql is not None:
+        return F.expr(sql)
+    v = _column(vec)
+    nv = norm(v) if norm_col is None else _column(norm_col)
     init = F.struct(
         F.lit(-1).alias("cid"), F.lit(float("-inf")).alias("score")
     )
@@ -315,16 +383,19 @@ def ivf_assign(
             F.struct(c.getField("cid").alias("cid"), sc.alias("score")),
         ).otherwise(acc)
 
-    return F.aggregate(arr, init, step)
+    return F.aggregate(F.expr(_centroid_table(centroids)), init, step)
 
 
 def ivf_cell(
     vec: ColumnLike,
     centroids: list[list[float]],
-    norm_col: Column | None = None,
+    norm_col: ColumnLike | None = None,
 ) -> Column:
     """Nearest-centroid id — ``ivf_assign(...).cid`` (see there for
     the fold's shape and quantization)."""
+    sql = _ivf_assign_sql(vec, centroids, norm_col)
+    if sql is not None:
+        return F.expr(sql + ".cid")
     return ivf_assign(vec, centroids, norm_col).getField("cid")
 
 
@@ -399,8 +470,8 @@ def ivf_topk(
     if centroids is None:
         centroids = ivf_centroids(df, n_cells, vec_col, id_col)
     probe = _rank_cells(centroids, query_vec, nprobe)
-    assigned = df.withColumn("_nv", norm(_col(vec_col))).withColumn(
-        "_cell", ivf_cell(vec_col, centroids, norm_col=F.col("_nv"))
+    assigned = df.withColumn("_nv", norm(vec_col)).withColumn(
+        "_cell", ivf_cell(vec_col, centroids, norm_col="_nv")
     )
     return brute_force_topk(
         assigned.filter(F.col("_cell").isin(probe)), query_vec, k, vec_col, id_col
@@ -421,7 +492,7 @@ def lsh_bucketed_topk(
     ``bucket`` so the probe prunes partitions instead of scanning."""
     dim = len(query_vec)
     planes = random_hyperplanes(dim, bits, seed)
-    bucketed = df.withColumn("bucket", hyperplane_bucket(_col(vec_col), planes))
+    bucketed = df.withColumn("bucket", hyperplane_bucket(vec_col, planes))
     qbucket = query_bucket(query_vec, planes)
     return brute_force_topk(
         bucketed.filter(F.col("bucket") == qbucket),
@@ -457,7 +528,7 @@ def kmeans_refine(
     cur = [list(map(float, c)) for c in centroids]
     vecs = df.select(_col(vec_col).alias("v"))
     for _ in range(iters):
-        assigned = vecs.withColumn("_cell", ivf_cell(F.col("v"), cur))
+        assigned = vecs.withColumn("_cell", ivf_cell("v", cur))
         means = (
             assigned.groupBy("_cell")
             .agg(*[F.avg(F.col("v")[i]).alias(f"m{i}") for i in range(dim)])
@@ -496,28 +567,43 @@ def knn_join(
     (``dedup.cross_corpus_pairs`` on hyperplane buckets) instead of
     an exact join.
     """
-    from pyspark.sql import Window
+    corpus, (cid, cv) = _named(corpus, id_col, vec_col)
+    queries, (qid, qv) = _named(queries, query_id_col, query_vec_col)
+    c = corpus.selectExpr(f"{cid} AS vec_id", f"{cv} AS _cv")
+    q = queries.selectExpr(f"{qid} AS query_id", f"{qv} AS _qv")
+    scored = c.crossJoin(F.broadcast(q)).withColumn(
+        "score", F.expr(f"round({_cos_sql('_cv', '_qv')}, {int(round_to)})")
+    )
+    return _top_k_per_query(scored, k)
 
-    c = corpus.select(
-        _col(id_col).alias("vec_id"), _col(vec_col).alias("_cv")
-    )
-    q = queries.select(
-        _col(query_id_col).alias("query_id"), _col(query_vec_col).alias("_qv")
-    )
-    scored = c.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "vec_id",
-        F.round(cosine(F.col("_cv"), F.col("_qv")), int(round_to)).alias(
-            "score"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("vec_id")
-    )
+
+def _named(df: DataFrame, *cols: ColumnLike) -> tuple[DataFrame, list]:
+    """``df`` and SQL text naming each of ``cols``. When one of them
+    is not a plain or qualified name (a ``Column``), all are first
+    projected to ``_c0``, ``_c1``, … so that SQL text can refer to
+    them: a ``Column`` select costs ~20 py4j round-trips per column,
+    a ``selectExpr`` of names ~1."""
+    sql = [_sql_operand(c) if isinstance(c, str) else None for c in cols]
+    if None not in sql:
+        return df, sql
+    names = [f"_c{i}" for i in range(len(cols))]
+    return df.select(*[_col(c).alias(n) for c, n in zip(cols, names)]), names
+
+
+def _top_k_per_query(scored: DataFrame, k: int) -> DataFrame:
+    """``(query_id, vec_id, score)``: each query's ``k`` best rows by
+    score desc, ties to the lower vec_id — a row_number rank whose
+    filter WindowGroupLimit prunes before the shuffle."""
     return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= int(k))
-        .drop("_rk")
+        scored.withColumn(
+            "_rk",
+            F.expr(
+                "row_number() OVER (PARTITION BY query_id "
+                "ORDER BY score DESC, vec_id ASC)"
+            ),
+        )
+        .filter(f"_rk <= {int(k)}")
+        .selectExpr("query_id", "vec_id", "score")
     )
 
 
@@ -552,8 +638,8 @@ def materialize_ivf(
         centroids = ivf_centroids(df, n_cells, vec_col, id_col)
     # hoist the row norm out of the centroid fold (as ivf_topk does)
     # — one sqrt per row instead of one per centroid per row
-    assigned = df.withColumn("_nv", norm(_col(vec_col))).withColumn(
-        "cell", ivf_cell(vec_col, centroids, norm_col=F.col("_nv"))
+    assigned = df.withColumn("_nv", norm(vec_col)).withColumn(
+        "cell", ivf_cell(vec_col, centroids, norm_col="_nv")
     ).drop("_nv")
     if quantize:
         codes = quantize_embeddings(df, vec_col, id_col)
@@ -628,10 +714,7 @@ def ivf_topk_from_store(
         # dimension already validated against the centroids above and
         # fixed at write time -> flat codegen'd scoring, no probe job
         return quantized_topk(store, qc, k, trusted_dim=len(query_vec))
-    return brute_force_topk(
-        store, query_vec, k, vec_col, id_col,
-        trusted_dim=len(centroids[0]) if centroids else None,
-    )
+    return brute_force_topk(store, query_vec, k, vec_col, id_col)
 
 
 def _write_sidecar_text(spark, dir_path: str, line: str) -> None:
@@ -750,9 +833,7 @@ def materialize_lsh(
             )
         dim = len(first[0])
     planes = random_hyperplanes(dim, bits, seed)
-    assigned = df.withColumn(
-        "bucket", hyperplane_bucket(_col(vec_col), planes)
-    )
+    assigned = df.withColumn("bucket", hyperplane_bucket(vec_col, planes))
     assigned.write.mode("overwrite").partitionBy("bucket").parquet(path)
 
 
@@ -786,12 +867,7 @@ def lsh_topk_from_store(
     flips = [i for _, i in sorted(margins)]
     probe = [qbucket] + [qbucket ^ (1 << i) for i in flips[: max(0, nprobe - 1)]]
     store = read_parquet_memo(spark, path).filter(F.col("bucket").isin(probe))
-    # the store's dimension is fixed by the planes' (write-time) dim;
-    # a query of a different width would probe garbage buckets anyway,
-    # so the store contract already requires matching dims
-    return brute_force_topk(
-        store, query_vec, k, vec_col, id_col, trusted_dim=dim
-    )
+    return brute_force_topk(store, query_vec, k, vec_col, id_col)
 
 
 def _integral_id_ok(df: DataFrame, id_col: ColumnLike) -> bool:
@@ -1098,6 +1174,34 @@ def _arrow_block_pairs(eps: float, block: int = 2048):
     return f
 
 
+def _salt_side(
+    scored: DataFrame, salt: DataFrame, id_name: str, vec_name: str,
+    norm_name: str, own: str, other: str,
+) -> DataFrame:
+    """One side of the ORDERED salt-block pair join over a ``(cell,
+    vec_id, e, _nv)`` assignment: each row takes its own sub-group
+    ``own`` = xxhash64(id) mod s and replicates across all ``s``
+    values of the OTHER side's sub-group ``other``, so joining on
+    ``(cell, _ga, _gb)`` puts every ordered pair in exactly one
+    block."""
+    return (
+        scored.select(
+            "cell",
+            F.col("vec_id").alias(id_name),
+            F.col("e").alias(vec_name),
+            F.col("_nv").alias(norm_name),
+        )
+        .join(F.broadcast(salt), "cell")
+        .withColumn(
+            own, F.pmod(F.xxhash64(F.col(id_name)), F.col("_s")).cast("int")
+        )
+        .withColumn(
+            other, F.explode(F.sequence(F.lit(0), F.col("_s") - 1))
+        )
+        .drop("_s")
+    )
+
+
 def _pairs_within_cells(
     scored: DataFrame,
     eps: float,
@@ -1144,40 +1248,8 @@ def _pairs_within_cells(
     # unordered {p, q} scheme the arrow kernel uses (which needs one
     # grouped frame per block), and the exact plan shape the r5 gate
     # pinned.
-    l = (
-        scored.select(
-            "cell",
-            F.col("vec_id").alias("a"),
-            F.col("e").alias("ea"),
-            F.col("_nv").alias("_na"),
-        )
-        .join(F.broadcast(salt), "cell")
-        .withColumn(
-            "_ga",
-            F.pmod(F.xxhash64(F.col("a")), F.col("_s")).cast("int"),
-        )
-        .withColumn(
-            "_gb", F.explode(F.sequence(F.lit(0), F.col("_s") - 1))
-        )
-        .drop("_s")
-    )
-    r = (
-        scored.select(
-            "cell",
-            F.col("vec_id").alias("b"),
-            F.col("e").alias("eb"),
-            F.col("_nv").alias("_nb"),
-        )
-        .join(F.broadcast(salt), "cell")
-        .withColumn(
-            "_gb",
-            F.pmod(F.xxhash64(F.col("b")), F.col("_s")).cast("int"),
-        )
-        .withColumn(
-            "_ga", F.explode(F.sequence(F.lit(0), F.col("_s") - 1))
-        )
-        .drop("_s")
-    )
+    l = _salt_side(scored, salt, "a", "ea", "_na", "_ga", "_gb")
+    r = _salt_side(scored, salt, "b", "eb", "_nb", "_gb", "_ga")
     denom = F.col("_na") * F.col("_nb")
     # statically-known width -> flat codegen'd sum; the interpreted
     # fold only remains for dynamic-width callers (see dot_unrolled).
@@ -1192,7 +1264,7 @@ def _pairs_within_cells(
         )
         pdot = F.when(widths_ok, dot_unrolled("ea", "eb", dim))
     else:
-        pdot = dot(F.col("ea"), F.col("eb"))
+        pdot = dot("ea", "eb")
     pscore = F.round(
         F.when(denom > 0, pdot / denom).otherwise(F.lit(0.0)),
         9,
@@ -1340,9 +1412,9 @@ def semantic_dedup(
     # the pair score costs one dot-product fold, not three.
     base = df.select(
         _col(id_col).alias("vec_id"), _col(vec_col).alias("e")
-    ).withColumn("_nv", norm(F.col("e")))
+    ).withColumn("_nv", norm("e"))
     scored = base.withColumn(
-        "_a", ivf_assign(F.col("e"), centroids, norm_col=F.col("_nv"))
+        "_a", ivf_assign("e", centroids, norm_col="_nv")
     ).select(
         "vec_id",
         "e",
@@ -1422,8 +1494,8 @@ def bucketed_cosine_pairs(
     planes = random_hyperplanes(len(first[0]), bits, seed)
     base = df.select(
         _col(id_col).alias("vec_id"), _col(vec_col).alias("e")
-    ).withColumn("_nv", norm(F.col("e"))).withColumn(
-        "cell", hyperplane_bucket(F.col("e"), planes)
+    ).withColumn("_nv", norm("e")).withColumn(
+        "cell", hyperplane_bucket("e", planes)
     )
     return _pairs_within_cells(
         base.select("cell", "vec_id", "e", "_nv"),
@@ -1627,13 +1699,13 @@ def contrastive_pairs(
 
     base = df.select(
         _col(id_col).alias("vec_id"), _col(vec_col).alias("e")
-    ).withColumn("_nv", norm(F.col("e")))
+    ).withColumn("_nv", norm("e"))
     # persisted: FIVE consumers read the assignment (both pair-join
     # sides, the two negative aggregates, and the final join) — the
     # same one-tokenize-pass rule as unigram_doc_scores; without it
     # the K-fold assignment runs per consumer
     assigned = base.withColumn(
-        "_a", ivf_assign(F.col("e"), centroids, norm_col=F.col("_nv"))
+        "_a", ivf_assign("e", centroids, norm_col="_nv")
     ).select(
         "vec_id", "e", "_nv", F.col("_a").getField("cid").alias("cell")
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -1692,40 +1764,8 @@ def contrastive_pairs(
     # pair lands in exactly block (ga(anchor), gb(cand)), so the
     # per-anchor (score desc, id asc) rank sees each candidate once;
     # s = 1 cells keep the plain single-block cell join.
-    l = (
-        assigned.select(
-            "cell",
-            F.col("vec_id").alias("anchor"),
-            F.col("e").alias("ea"),
-            F.col("_nv").alias("_na"),
-        )
-        .join(F.broadcast(salt), "cell")
-        .withColumn(
-            "_ga",
-            F.pmod(F.xxhash64(F.col("anchor")), F.col("_s")).cast("int"),
-        )
-        .withColumn(
-            "_gb", F.explode(F.sequence(F.lit(0), F.col("_s") - 1))
-        )
-        .drop("_s")
-    )
-    r = (
-        assigned.select(
-            "cell",
-            F.col("vec_id").alias("cand"),
-            F.col("e").alias("eb"),
-            F.col("_nv").alias("_nb"),
-        )
-        .join(F.broadcast(salt), "cell")
-        .withColumn(
-            "_gb",
-            F.pmod(F.xxhash64(F.col("cand")), F.col("_s")).cast("int"),
-        )
-        .withColumn(
-            "_ga", F.explode(F.sequence(F.lit(0), F.col("_s") - 1))
-        )
-        .drop("_s")
-    )
+    l = _salt_side(assigned, salt, "anchor", "ea", "_na", "_ga", "_gb")
+    r = _salt_side(assigned, salt, "cand", "eb", "_nb", "_gb", "_ga")
     denom = F.col("_na") * F.col("_nb")
     # centroids fix the vector width -> flat codegen'd sum instead of
     # the interpreted fold on every candidate pair (see dot_unrolled);
@@ -1818,7 +1858,7 @@ def ivf_knn_join(
     Scale shape: corpus cell assignment is one codegen'd fold pass
     (no shuffle; reuse a :func:`materialize_ivf` store to skip even
     that and get partition pruning); per-query probe cells come from
-    a |queries| x K broadcast cross join (centroid table is K rows);
+    the K-row centroid literal inlined on each query row;
     candidate generation joins the corpus on ``cell`` against the
     BROADCAST (query, cell) probe list, so the corpus streams once
     and only rows in probed cells are ever scored — candidate volume
@@ -1830,8 +1870,6 @@ def ivf_knn_join(
     cell id (identical to :func:`ivf_cell`/:func:`ivf_topk`); scores
     round to ``round_to`` dp before ranking with ties on corpus id
     (engine-independent, oracle-stable)."""
-    from pyspark.sql import Window
-
     derived = centroids is None
     if derived:
         centroids = ivf_centroids(corpus, n_cells, vec_col, id_col)
@@ -1845,49 +1883,30 @@ def ivf_knn_join(
         q0 = queries.limit(0).select(_col(query_id_col).alias("query_id"))
         c0 = corpus.limit(0).select(_col(id_col).alias("vec_id"))
         return q0.crossJoin(c0).withColumn("score", F.lit(0.0))
-    spark = corpus.sparkSession
-    cent_df = local_table(
-        spark,
-        [
-            (i, [float(x) for x in c], _pynorm([float(x) for x in c]))
-            for i, c in enumerate(centroids)
-        ],
-        "cell int, cvec array<double>, cnorm double",
+    corpus, (cid, cv) = _named(corpus, id_col, vec_col)
+    assigned = corpus.selectExpr(
+        f"{cid} AS vec_id", f"{cv} AS _cv", f"{_norm_sql(cv)} AS _cn"
+    ).withColumn("cell", ivf_cell("_cv", centroids, norm_col="_cn"))
+    # each query's nprobe cells in one row-local expression, no join or
+    # window: the centroid literal ivf_assign folds over, scored with
+    # hoisted norms (same quantization and sqrt/multiply order as
+    # cosine()/ivf_assign), sorted by (score desc, cell asc) — the
+    # descending sort_array puts NaN first and NULL last, as a window's
+    # ORDER BY score DESC does — then cut to nprobe and exploded
+    ranked = (
+        f"sort_array(transform({_centroid_table(centroids)}, c -> "
+        f"named_struct('s', round({_cos_sql('_qv', 'c.cvec', '_qn * c.cnorm')}, 9), "
+        "'n', -c.cid)), false)"
     )
-    c = corpus.select(
-        _col(id_col).alias("vec_id"), _col(vec_col).alias("_cv")
-    ).withColumn("_cn", norm(F.col("_cv")))
-    assigned = c.withColumn(
-        "cell", ivf_cell(F.col("_cv"), centroids, norm_col=F.col("_cn"))
-    )
-    q = queries.select(
-        _col(query_id_col).alias("query_id"), _col(query_vec_col).alias("_qv")
-    ).withColumn("_qn", norm(F.col("_qv")))
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("_qcos"), F.asc("cell")
-    )
-    # probe ranking with hoisted norms too: _qn is on the query row
-    # and centroid norms are driver-computed literals in cent_df, so
-    # each of the |queries|×K rows costs ONE dot fold (same
-    # quantization and sqrt/multiply order as cosine()/ivf_assign)
-    qdenom = F.col("_qn") * F.col("cnorm")
-    probes = (
-        q.crossJoin(F.broadcast(cent_df))
-        .select(
-            "query_id",
-            "_qv",
-            "_qn",
-            "cell",
-            F.round(
-                F.when(
-                    qdenom > 0, dot(F.col("_qv"), F.col("cvec")) / qdenom
-                ).otherwise(F.lit(0.0)),
-                9,
-            ).alias("_qcos"),
-        )
-        .withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= int(nprobe))
-        .select("query_id", "_qv", "_qn", "cell")
+    queries, (qid, qv) = _named(queries, query_id_col, query_vec_col)
+    probes = queries.selectExpr(
+        f"{qid} AS query_id", f"{qv} AS _qv", f"{_norm_sql(qv)} AS _qn"
+    ).withColumn(
+        "_pcell",
+        F.expr(
+            f"explode(transform(slice({ranked}, 1, {max(0, int(nprobe))}), "
+            "p -> -p.n))"
+        ),
     )
     if score_backend == "arrow":
         qid_type = dict(probes.dtypes)["query_id"]
@@ -1929,35 +1948,28 @@ def ivf_knn_join(
         scored = (
             assigned.select("cell", "vec_id", "_cv", "_cn")
             .groupBy("cell")
-            .cogroup(probes.groupBy("cell"))
+            .cogroup(probes.groupBy("_pcell"))
             .applyInPandas(score_cell, out_schema)
         )
     elif score_backend == "expr":
         # norms hoisted: the per-candidate score is ONE dot-product
-        # fold
-        denom = F.col("_cn") * F.col("_qn")
-        scored = assigned.join(F.broadcast(probes), "cell").select(
-            "query_id",
-            "vec_id",
-            F.round(
-                F.when(
-                    denom > 0, dot(F.col("_cv"), F.col("_qv")) / denom
-                ).otherwise(F.lit(0.0)),
-                int(round_to),
-            ).alias("score"),
+        # fold. The cell equality becomes the broadcast hash join's key.
+        scored = (
+            assigned.crossJoin(F.broadcast(probes))
+            .filter("cell = _pcell")
+            .withColumn(
+                "score",
+                F.expr(
+                    f"round({_cos_sql('_cv', '_qv', '_cn * _qn')}, "
+                    f"{int(round_to)})"
+                ),
+            )
         )
     else:
         raise ValueError(
             f"ivf_knn_join: unknown score_backend {score_backend!r}"
         )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= int(k))
-        .drop("_rk")
-    )
+    return _top_k_per_query(scored, k)
 
 
 def embedding_mean_cov(df: DataFrame, vec_col: ColumnLike = "embedding"):
@@ -2110,7 +2122,7 @@ def pca_project(
     cols = []
     for j, c in enumerate(comps):
         shift = _pydot(mu, c)
-        expr = dot(_col(vec_col), lit_vec(c)) - F.lit(shift)
+        expr = dot(vec_col, c) - F.lit(shift)
         if scales is not None:
             expr = expr * F.lit(scales[j])
         cols.append(expr)
@@ -2192,21 +2204,22 @@ def quantized_topk(
     ``trusted_dim``: when the caller has already validated both the
     query and the store dimension (:func:`ivf_topk_from_store` checks
     against the centroids, and the write path fixes the code width),
-    the one-row dimension-probe JOB is skipped and the integer dot
-    builds from single-parse SQL folds — identical exact-integer
-    values, one fewer scheduled job per probe, and no per-probe
-    codegen recompile (see :func:`dot_lit_fold`)."""
+    the one-row dimension-probe JOB is skipped and a per-row width
+    check raises instead: one fewer scheduled job per probe. Either
+    way both integer folds are parsed SQL text (see the module
+    docstring), so the query codes stay inside the interpreted fold
+    and never compile a class of their own."""
     q = [int(x) for x in query_codes]
+    arr = "CAST(array(" + ",".join(map(str, q)) + ") AS array<int>)"
+    idot = F.expr(
+        f"aggregate(zip_with(codes, {arr}, "
+        "(x, y) -> CAST(x AS BIGINT) * CAST(y AS BIGINT)), "
+        "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
+    )
     if trusted_dim and trusted_dim == len(q):
-        arr = "array(" + ",".join(f"CAST({qi} AS INT)" for qi in q) + ")"
-        idot = F.expr(
-            f"aggregate(zip_with(codes, {arr}, "
-            "(x, y) -> CAST(x AS BIGINT) * CAST(y AS BIGINT)), "
-            "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        )
-        # keep the r6 guarantee on the trusted fast path too (ADVICE
-        # r13): if the store's codes ever disagree with the sidecar
-        # the caller validated against (partial rewrite, mixed writer
+        # keep the r6 guarantee on the trusted path too (ADVICE r13):
+        # if the store's codes ever disagree with the sidecar the
+        # caller validated against (partial rewrite, mixed writer
         # versions), RAISE instead of letting zip_with NULL-pad and
         # silently sort mismatched rows last. One O(1) size() read
         # per row, no extra job.
@@ -2219,13 +2232,6 @@ def quantized_topk(
                 )
             ).cast("bigint")
         )
-        cn = F.sqrt(
-            F.expr(
-                "aggregate(transform(codes, "
-                "x -> CAST(x AS BIGINT) * CAST(x AS BIGINT)), "
-                "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-            ).cast("double")
-        )
     else:
         probe = codes_df.select(F.size("codes").alias("_d")).first()
         if probe is not None and probe["_d"] != len(q):
@@ -2233,23 +2239,13 @@ def quantized_topk(
                 f"quantized_topk: query has {len(q)} codes but the "
                 f"store's code dimension is {probe['_d']}"
             )
-        c = F.col("codes")
-        idot = F.aggregate(
-            F.zip_with(
-                c,
-                lit_vec_int(q),
-                lambda a, b: (a.cast("long") * b.cast("long")),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        cn = F.sqrt(
-            F.aggregate(
-                F.transform(c, lambda x: x.cast("long") * x.cast("long")),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).cast("double")
-        )
+    cn = F.sqrt(
+        F.expr(
+            "aggregate(transform(codes, "
+            "x -> CAST(x AS BIGINT) * CAST(x AS BIGINT)), "
+            "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
+        ).cast("double")
+    )
     qn = sum(x * x for x in q) ** 0.5
     score = F.round(
         F.when(
@@ -2507,8 +2503,8 @@ def append_ivf(
     if skip_existing_ids:
         df = _anti_join_store_ids(df, store, id_col)
     assigned = (
-        df.withColumn("_nv", norm(_col(vec_col)))
-        .withColumn("cell", ivf_cell(vec_col, centroids, norm_col=F.col("_nv")))
+        df.withColumn("_nv", norm(vec_col))
+        .withColumn("cell", ivf_cell(vec_col, centroids, norm_col="_nv"))
         .drop("_nv")
     )
     quantized = "codes" in store.columns
@@ -2547,9 +2543,7 @@ def append_lsh(
             return
         dim = len(first[0])
     planes = random_hyperplanes(dim, bits, seed)
-    assigned = df.withColumn(
-        "bucket", hyperplane_bucket(_col(vec_col), planes)
-    )
+    assigned = df.withColumn("bucket", hyperplane_bucket(vec_col, planes))
     assigned.write.mode("append").partitionBy("bucket").parquet(path)
 
 

@@ -3449,7 +3449,7 @@ def q_dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("l.vec_id").alias("vec_a"),
             F.col("r.vec_id").alias("vec_b"),
-            F.round(sim.cosine(F.col("l.e"), F.col("r.e")), 6).alias("cos"),
+            F.round(sim.cosine("l.e", "r.e"), 6).alias("cos"),
         )
         .filter(F.col("cos") >= 0.3)
         .distinct()
@@ -4736,11 +4736,9 @@ def q_semantic_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     emb = _t(spark, sf_dir, "embeddings")
     cents = sim.ivf_centroids(emb, 16)
-    cells = emb.withColumn("_nv", sim.norm(F.col("embedding"))).select(
+    cells = emb.withColumn("_nv", sim.norm("embedding")).select(
         F.col("vec_id").alias("doc_id"),
-        sim.ivf_cell(
-            "embedding", cents, norm_col=F.col("_nv")
-        ).alias("cell"),
+        sim.ivf_cell("embedding", cents, norm_col="_nv").alias("cell"),
     )
     joined = docs.join(cells, "doc_id")
     return tx.pack_sequences(joined, 512, part="cell")

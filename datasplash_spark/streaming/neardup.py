@@ -244,12 +244,9 @@ def semantic_admitter(
             batch_df.select(
                 F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
             )
-            .withColumn("norm", sim.norm(F.col("embedding")))
+            .withColumn("norm", sim.norm("embedding"))
             .withColumn(
-                "_a",
-                sim.ivf_assign(
-                    F.col("embedding"), cents, norm_col=F.col("norm")
-                ),
+                "_a", sim.ivf_assign("embedding", cents, norm_col="norm")
             )
             .select(
                 "vec_id",
@@ -308,7 +305,7 @@ def semantic_admitter(
                         F.round(
                             F.when(
                                 denom > 0,
-                                sim.dot(F.col("embedding"), F.col("_se"))
+                                sim.dot("embedding", "_se")
                                 / denom,
                             ).otherwise(F.lit(0.0)),
                             9,

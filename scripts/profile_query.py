@@ -12,7 +12,11 @@ bench's inter-measurement hygiene, and print per-stage wall/cpu from
 the AppStatusStore (``bench._stage_rows``) so the expensive stage is
 visible without a UI. Each rep line also carries the generated classes
 it compiled and their compile ms (``_codegen``): a warm rep that keeps
-compiling shows a codegen class cache thrash.
+compiling shows a codegen class cache thrash. ``build_ms=`` is the
+part of the wall spent building the DataFrame on the driver, and
+``py4j_calls=`` counts the driver's py4j round-trips in the rep (plan
+build plus action): a plan built from Python lambdas pays one per
+expression node.
 """
 
 from __future__ import annotations
@@ -80,6 +84,28 @@ def _codegen(spark) -> tuple[int, float]:
     return count, nanos / 1e6
 
 
+class _Py4jCounter:
+    """Counts the py4j commands the driver's main thread sends to the
+    JVM: the gateway client's ``send_command`` is wrapped on the
+    instance, so every Java object sharing that client goes through
+    the count. py4j's finalizer thread, which releases dead objects
+    at any time, is left out."""
+
+    def __init__(self, spark):
+        import threading
+
+        self.n = 0
+        client = spark.sparkContext._gateway._gateway_client
+        real = client.send_command
+        me = threading.get_ident()
+
+        def send_command(*args, **kwargs):
+            self.n += threading.get_ident() == me
+            return real(*args, **kwargs)
+
+        client.send_command = send_command
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
@@ -105,6 +131,7 @@ def main() -> int:
     warm.groupBy("l_returnflag").count().count()
     warm_workers(spark)
 
+    py4j = _Py4jCounter(spark)
     qs = Q.queries()
     for name in args.names:
         fn = qs[name]
@@ -123,9 +150,13 @@ def main() -> int:
             pre = _stage_rows(spark)
             pre_jobs = _job_rows(spark) if args.jobs else {}
             cg0 = _codegen(spark)
+            calls0 = py4j.n
             t0 = time.time()
-            n = fn(spark, args.sf_dir).count()
+            df = fn(spark, args.sf_dir)
+            build_ms = (time.time() - t0) * 1e3
+            n = df.count()
             dt = time.time() - t0
+            calls = py4j.n - calls0
             cg1 = _codegen(spark)
             post = _stage_rows(spark)
             if args.jobs and rep == args.reps - 1:
@@ -152,7 +183,8 @@ def main() -> int:
             print(f"## {name} rep{rep}: wall={dt:.3f}s jvm_run={run:.2f}s "
                   f"jvm_cpu={cpu:.2f}s rows={n} "
                   f"compiles={cg1[0] - cg0[0]} "
-                  f"compile_ms={cg1[1] - cg0[1]:.0f}")
+                  f"compile_ms={cg1[1] - cg0[1]:.0f} "
+                  f"build_ms={build_ms:.0f} py4j_calls={calls}")
             if rep == args.reps - 1:
                 new = {k: v for k, v in post.items()
                        if k not in pre or v[0] != pre[k][0]}

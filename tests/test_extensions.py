@@ -112,9 +112,9 @@ def test_ivf_topk_finds_query_and_bounds_probe(spark):
 
 
 def _named_struct_centroid_table(centroids):
-    """The centroid table as the array(named_struct(...)) SQL tree
+    """The centroid table as the array(named_struct(...)) SQL text
     that preceded the from_json literal: the differential reference."""
-    return F.expr(
+    return (
         "array("
         + ",".join(
             "named_struct('cid',CAST(%d AS INT),'cvec',array(%s),'cnorm',%s)"
@@ -176,7 +176,7 @@ def test_centroid_table_matches_named_struct_tree(spark, monkeypatch, special):
     df = generate_input(spark, vecs, "vec_id bigint, embedding array<double>")
 
     def table_cells(build):
-        (row,) = spark.range(1).select(build(cents).alias("t")).collect()
+        (row,) = spark.range(1).select(F.expr(build(cents)).alias("t")).collect()
         return [(c.cid, c.cvec, c.cnorm) for c in row.t]
 
     new_cells = table_cells(sim._centroid_table)
@@ -226,6 +226,149 @@ def test_centroid_table_matches_named_struct_tree(spark, monkeypatch, special):
     for k in got:
         assert got[k][0] == ref[k][0], k
         assert _same_double(got[k][1], ref[k][1]), k
+
+
+def _fold_bits(v):
+    """A collected value with every double as its IEEE-754 bytes."""
+    import struct
+
+    if isinstance(v, float):
+        return struct.pack("<d", v)
+    if isinstance(v, (tuple, list)):
+        return tuple(_fold_bits(x) for x in v)
+    return v
+
+
+def test_vector_fold_sql_matches_lambda_fold(spark):
+    """dot, norm, cosine, ivf_assign, ivf_cell and hyperplane_bucket
+    render one parsed SQL string for column names and literal
+    vectors; each must equal the lambda fold the builder keeps for
+    ``Column`` inputs bit for bit (``struct.pack`` bytes of every
+    double) on NaN, ±inf, all-zero, short, NULL and NULL-element
+    rows, on ``array<float>``, through dotted names (a struct field
+    and a qualified column), and with columns named like the folds'
+    lambda variables (``c``/``acc`` in ivf_assign's outer lambda,
+    ``x``/``a`` elsewhere)."""
+    nan, inf = float("nan"), float("inf")
+    rows = [
+        (0, [1.0, 2.0, 3.0, 4.0]),
+        (1, [nan, 1.0, 0.0, 2.0]),
+        (2, [inf, 1.0, -1.0, 0.5]),
+        (3, [-inf, 0.25, 3.0, -2.0]),
+        (4, [0.0, 0.0, 0.0, 0.0]),
+        (5, [1.0, -2.0]),
+        (6, None),
+        (7, [1.0, None, 3.0, 4.0]),
+        (8, [-0.0, 5e-324, 1e308, -1e-3]),
+        (9, [0.1, -1 / 3, 2.5e-7, 7.0]),
+    ]
+    t = (
+        spark.createDataFrame(rows, "vec_id long, c array<double>")
+        .selectExpr(
+            "vec_id",
+            "c",
+            "reverse(c) AS x",
+            "transform(c, e -> e * 0.5D) AS a",
+            "CAST(c AS array<float>) AS f",
+            "named_struct('e', reverse(c)) AS s",
+            "sqrt(aggregate(c, 0.0D, (p, e) -> p + e * e)) AS acc",
+        )
+        .alias("t")
+    )
+    cents = [
+        [1.0, 0.0, 0.0, 0.0],
+        [0.0, 1.0, 0.0, 0.0],
+        [0.5, 0.5, -1.0, 2.0],
+        [0.0, 0.0, 0.0, 0.0],
+        [inf, 0.0, 0.0, 1.0],
+        [0.5, 0.5, -1.0, 2.0],  # tie with cid 2: the lower cid wins
+    ]
+    planes = sim.random_hyperplanes(4, 6)
+    lit = [0.3, -1.0, 2.0, nan]
+    cases = [
+        (sim.dot, ("c", "x")),
+        (sim.dot, ("f", lit)),
+        (sim.dot, ("s.e", "t.a")),
+        (sim.norm, ("c",)),
+        (sim.norm, ("f",)),
+        (sim.norm, ("s.e",)),
+        (sim.cosine, ("c", "x")),
+        (sim.cosine, ("f", lit)),
+        (sim.cosine, ("t.c", "s.e")),
+        (lambda v, n: sim.ivf_assign(v, cents, norm_col=n), ("c", "acc")),
+        (lambda v: sim.ivf_assign(v, cents), ("x",)),
+        (lambda v: sim.ivf_assign(v, cents), ("f",)),
+        (lambda v, n: sim.ivf_cell(v, cents, norm_col=n), ("s.e", "acc")),
+        (lambda v: sim.hyperplane_bucket(v, planes), ("c",)),
+        (lambda v: sim.hyperplane_bucket(v, planes), ("f",)),
+        (lambda v: sim.hyperplane_bucket(v, planes), ("s.e",)),
+    ]
+
+    def as_column(arg):
+        return F.col(arg) if isinstance(arg, str) else arg
+
+    out = t.select(
+        "vec_id",
+        *[fn(*args).alias(f"n{i}") for i, (fn, args) in enumerate(cases)],
+        *[
+            fn(*map(as_column, args)).alias(f"r{i}")
+            for i, (fn, args) in enumerate(cases)
+        ],
+    ).collect()
+    assert len(out) == len(rows)
+    for row in out:
+        for i in range(len(cases)):
+            got, ref = row[f"n{i}"], row[f"r{i}"]
+            assert _fold_bits(got) == _fold_bits(ref), (row.vec_id, i, got, ref)
+
+
+def test_vector_fold_build_cost(spark, tables, monkeypatch):
+    """Building from names and literal vectors costs a handful of py4j
+    round-trips, not one per lambda node (3,140 for the 16-plane bucket
+    and ~1,400 for the IVF join when they were lambda folds): a
+    16-plane hyperplane_bucket at most 10, a 16×64 ivf_assign at most
+    5 and a whole ivf_knn_join with explicit centroids at most 50.
+    Each build is counted warm, and only the commands its own thread
+    sends: py4j's finalizer thread releases objects of earlier tests
+    at any time. The join reads parquet, and its plan must carry no
+    ``LogicalRDD`` (a driver table read through Python workers)."""
+    import random
+    import threading
+
+    rng = random.Random(13)
+    cents = [[rng.uniform(-1, 1) for _ in range(64)] for _ in range(16)]
+    planes = sim.random_hyperplanes(64, 16)
+    corpus = tables["embeddings"].select("vec_id", "embedding")
+    queries = corpus.limit(3).withColumnRenamed("vec_id", "query_id")
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+
+    def calls(build):
+        build()
+        sent, me = [], threading.get_ident()
+
+        def spy(command, *args, **kwargs):
+            if threading.get_ident() == me:
+                sent.append(command[:60])
+            return real(command, *args, **kwargs)
+
+        monkeypatch.setattr(client, "send_command", spy)
+        try:
+            built = build()
+        finally:
+            monkeypatch.undo()
+        return sent, built
+
+    sent, _ = calls(lambda: sim.hyperplane_bucket("embedding", planes))
+    assert len(sent) <= 10, sent
+    sent, _ = calls(lambda: sim.ivf_assign("embedding", cents))
+    assert len(sent) <= 5, sent
+    sent, knn = calls(
+        lambda: sim.ivf_knn_join(corpus, queries, k=3, centroids=cents)
+    )
+    assert len(sent) <= 50, sent
+    plan = knn._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in plan, plan
 
 
 def test_multimodal_features_and_stub(spark):
@@ -1388,22 +1531,29 @@ def test_pair_join_broadcast_parallel(spark):
 
 
 def test_trusted_dim_paths_match_fold_paths(spark, tmp_path):
-    """r13 probe optimizations must be value-identical: the
-    trusted-dim flat scoring equals the fold scoring bit-for-bit
-    (scores compared exactly), the quantized trusted path equals the
-    probe-validated path, the memoized store schema is invalidated
-    by a rewrite, and the driver-side sidecar read returns exactly
-    what spark.read.text returns."""
+    """r13 probe optimizations must be value-identical: the parsed-SQL
+    scoring of a named vector column (driver-side query norm in the
+    row norm's finish lambda) equals the lambda-fold scoring of the
+    same column as a ``Column`` bit-for-bit (scores compared exactly),
+    the quantized trusted path equals the probe-validated path, the
+    memoized store schema is invalidated by a rewrite, and the
+    driver-side sidecar read returns exactly what spark.read.text
+    returns."""
     vecs = [
         (i, [float(i + 1)] + [((i * 5 + j) % 7) - 3.0 for j in range(15)])
         for i in range(50)
     ]
     df = generate_input(spark, vecs, "vec_id bigint, embedding array<double>")
     q = vecs[7][1]
-    fold = [(r.vec_id, r.score) for r in sim.brute_force_topk(df, q, 8).collect()]
+    fold = [
+        (r.vec_id, r.score)
+        for r in sim.brute_force_topk(
+            df, q, 8, vec_col=F.col("embedding")
+        ).collect()
+    ]
     flat = [
         (r.vec_id, r.score)
-        for r in sim.brute_force_topk(df, q, 8, trusted_dim=len(q)).collect()
+        for r in sim.brute_force_topk(df, q, 8, vec_col="embedding").collect()
     ]
     assert flat == fold
     codes = sim.quantize_embeddings(df)
@@ -1608,6 +1758,51 @@ def test_ivf_knn_join_full_probe_equals_exact(spark):
     }
     for qid, vid in tops.items():
         assert vid == qid
+
+
+def test_ivf_knn_join_probes_match_rank_cells(spark):
+    """ivf_knn_join's per-query probe cells are the nprobe best by
+    9-dp cosine, ties to the lower cell id: exactly the cells the
+    driver-side ``_rank_cells`` picks for ivf_topk, here with two
+    duplicated centroids (exact score ties) and a zero centroid (score
+    0). With k above the corpus size, the join returns every vector
+    of those cells and no other."""
+    vecs = [
+        (i, [float((i * 7) % 5) - 2.0, float((i * 3) % 4) - 1.5, 1.0, float(i % 2)])
+        for i in range(40)
+    ]
+    df = generate_input(spark, vecs, "vec_id bigint, embedding array<double>")
+    queries = df.filter("vec_id % 8 = 0").selectExpr(
+        "vec_id AS query_id", "embedding"
+    )
+    cents = [
+        [1.0, 0.0, 1.0, 0.0],
+        [-1.0, 1.0, 1.0, 1.0],
+        [1.0, 0.0, 1.0, 0.0],
+        [0.0, 0.0, 0.0, 0.0],
+        [-1.0, 1.0, 1.0, 1.0],
+        [2.0, -1.5, 1.0, 1.0],
+    ]
+    cell = {
+        r.vec_id: r.cell
+        for r in df.select("vec_id", sim.ivf_cell("embedding", cents).alias("cell"))
+        .collect()
+    }
+    for nprobe in (1, 2, 4):
+        got = {
+            (r.query_id, r.vec_id)
+            for r in sim.ivf_knn_join(
+                df, queries, k=100, centroids=cents, nprobe=nprobe
+            ).collect()
+        }
+        want = {
+            (q, v)
+            for q, qv in vecs
+            if q % 8 == 0
+            for v in cell
+            if cell[v] in sim._rank_cells(cents, qv, nprobe)
+        }
+        assert got == want, nprobe
 
 
 def test_semantic_dedup_differential_random(spark):

@@ -1451,8 +1451,9 @@ def test_make_session_reuses_classes_across_stage_ids(spark):
 def _driver_table_frames(spark, tmp_path):
     """The public frames whose plans carry a driver-built table: the
     salt widths of contrastive_pairs, the query terms and probes of
-    the three BM25 entry points, the IVF centroids of ivf_knn_join
-    and the weights train_linear_classifier returns. Inputs are
+    the three BM25 entry points and the weights
+    train_linear_classifier returns. (ivf_knn_join's centroids are a
+    literal inside its probe expression, not a table.) Inputs are
     parquet scans, so any ``LogicalRDD`` in a plan is a driver table
     shipped through Python workers."""
     from pyspark.sql import functions as F
@@ -1480,13 +1481,6 @@ def _driver_table_frames(spark, tmp_path):
         "bm25_batch": tx.bm25_batch(docs, queries, top_k=3),
         "bm25_batch_from_store": tx.bm25_batch_from_store(
             spark, store, queries, top_k=3
-        ),
-        "ivf_knn_join": sim.ivf_knn_join(
-            emb,
-            emb.limit(4).withColumnRenamed("vec_id", "query_id"),
-            k=2,
-            n_cells=4,
-            nprobe=2,
         ),
         "train_linear_classifier": tx.train_linear_classifier(
             labeled, n_buckets=16, epochs=1
